@@ -314,10 +314,6 @@ object SparkEntry {
     // (candidate explosion — measured 204s at sf0.1 with bigrams);
     // trigrams restore discrimination (the reference corpus granularity
     // most dedup pipelines use).
-    // cap disabled here: this query's oracle is an UNCAPPED all-pairs scan,
-    // so the skew guard (production default) must not drop any bucket —
-    // exactness is the claim under test. Production callers keep the cap
-    // and monitor Dedup.oversizedBuckets.
     // Runs with the DEFAULT LSH skew cap — the configuration a 100 TB run
     // uses (round-6 verdict #1: these queries previously passed
     // Int.MaxValue "for exact recall", the one setup that goes quadratic

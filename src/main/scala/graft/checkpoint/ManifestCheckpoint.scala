@@ -39,14 +39,6 @@ object ManifestCheckpoint {
       completed_at_ms: Long,
   )
 
-  /** Order-independent content fingerprint per partition: (rows, xor of
-    * WHOLE-ROW hashes) — one aggregation. Hashing every column (not just
-    * the key) means any in-place edit — a nulled field, corrupted payload
-    * bytes — flips the fingerprint and re-queues the partition; a key-only
-    * hash would silently skip re-validation of rows whose key survived the
-    * change. Cost: the resume check reads the full partition once; on real
-    * Iceberg this whole mechanism is replaced by snapshot/data-file ids
-    * (metadata-only), the adapter seam this emulates. */
   /** NULL partition values get their own manifest key: a raw NULL would
     * fall out of the `isin(pending)` slice filter on every run — a slice
     * the engine silently never validates, the exact failure the checkpoint
@@ -56,6 +48,14 @@ object ManifestCheckpoint {
   private[checkpoint] def partitionKey(partitionCol: String) =
     coalesce(col(partitionCol).cast("string"), lit(NullPartitionKey))
 
+  /** Order-independent content fingerprint per partition: (rows, xor of
+    * WHOLE-ROW hashes) — one aggregation. Hashing every column (not just
+    * the key) means any in-place edit — a nulled field, corrupted payload
+    * bytes — flips the fingerprint and re-queues the partition; a key-only
+    * hash would silently skip re-validation of rows whose key survived the
+    * change. Cost: the resume check reads the full partition once; on real
+    * Iceberg this whole mechanism is replaced by snapshot/data-file ids
+    * (metadata-only), the adapter seam this emulates. */
   def fingerprints(df: DataFrame, partitionCol: String): DataFrame = {
     val allCols = df.columns.map(c => s"`$c`").mkString(", ")
     df.groupBy(partitionKey(partitionCol).as("partition_value"))
@@ -153,12 +153,13 @@ object ManifestCheckpoint {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
   }
 
-  /** Partition values that still need validation: no manifest entry, or
-    * content fingerprint changed since the recorded run. */
-  def pendingPartitions(spark: SparkSession, df: DataFrame,
-      partitionCol: String, manifestDir: String): Seq[String] =
-    pendingAgainstManifest(spark, fingerprints(df, partitionCol), manifestDir)
-      .map(_._1)
+  /** Upper pending-set size for fusing the per-partition metrics into the
+    * violations-write job as `observe` aggregates (two conditional sums per
+    * pending partition ride the write's single pass — zero extra scans).
+    * Past this, the conditional-sum fan-out stops being free and the
+    * metrics fall back to one grouped aggregation over the slice (still
+    * narrow: the lineage hash is NOT recomputed there, see below). */
+  private val ObserveFuseMaxPartitions = 64
 
   /** Validate only pending partitions; write violations under
     * `outDir/violations/partition_value=<v>/` and append manifest entries.
@@ -175,14 +176,6 @@ object ManifestCheckpoint {
     * fingerprint together — a constant number of jobs regardless of
     * partition count (the per-partition loop ran ~2 jobs × N partitions,
     * serially: ~2000 jobs at 1000 partitions). */
-  /** Upper pending-set size for fusing the per-partition metrics into the
-    * violations-write job as `observe` aggregates (two conditional sums per
-    * pending partition ride the write's single pass — zero extra scans).
-    * Past this, the conditional-sum fan-out stops being free and the
-    * metrics fall back to one grouped aggregation over the slice (still
-    * narrow: the lineage hash is NOT recomputed there, see below). */
-  private val ObserveFuseMaxPartitions = 64
-
   def runResumable(spark: SparkSession, df: DataFrame, spec: TableSpec,
       manifestDir: String, outDir: String,
       fingerprintSource: Option[() => DataFrame] = None): Seq[String] = {
@@ -346,12 +339,12 @@ object ManifestCheckpoint {
     val rowsIn = slice.groupBy(col("_part").as("partition_value"))
       .agg(count(lit(1)).as("n")).collect() // O(#pending) — narrow scan
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // cast the partition column to string BEFORE collecting: Spark's
-    // partition-type inference turns a numeric-looking partition value
-    // (e.g. a sample rate) into an int, and a bare getString would throw
-    // ClassCastException mid-manifest-write (round-8 advice)
-    val rowsOut = spark.read.parquet(dataRoot)
-      .select(col("partition_value").cast("string").as("partition_value"))
+    // read partition_value back as a STRING via an explicit schema:
+    // partition-type inference would turn '007' into 7 and '1.50' into
+    // 1.5, and the isin(pending) filter would then miss those partitions
+    // and record valid_rows=0 for them. The schema names no data column,
+    // so the count reads file metadata only.
+    val rowsOut = spark.read.schema("partition_value STRING").parquet(dataRoot)
       .where(col("partition_value").isin(pending: _*))
       .groupBy("partition_value").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -70,6 +70,37 @@ object Dedup {
       .drop("_bucket_size")
   }
 
+  /** The banded candidate self-join behind every near-dup path: cap
+    * `banded`'s buckets on `keys`, self-join on them, keep `id_a < id_b`,
+    * dedupe. `banded` holds `_id`, the keys and any `carry` columns; each
+    * carry column `c` comes back per side as `c_a` and `c_b` (simhash
+    * carries its signature so the Hamming check needs no second join).
+    * Output: distinct (id_a, id_b, carry_a..., carry_b...). */
+  private def bandedPairs(banded: DataFrame, keys: Seq[String], maxBucket: Int,
+      carry: Seq[String] = Nil): DataFrame = {
+    val capped = capBuckets(banded, keys, maxBucket)
+    def side(s: String) = capped.select(keys.map(col) ++
+      (col("_id").as(s"id_$s") +: carry.map(c => col(c).as(s"${c}_$s"))): _*)
+    val out = Seq("id_a", "id_b") ++ Seq("a", "b").flatMap(s => carry.map(c => s"${c}_$s"))
+    side("a").join(side("b"), keys)
+      .where(col("id_a") < col("id_b"))
+      .select(out.map(col): _*).distinct()
+  }
+
+  /** The verify join behind every scored near-dup path: attach the
+    * `(_id, _f)` feature of `featA` to each pair's id_a and of `featB` to
+    * its id_b, score the pair, keep scores ≥ `threshold`, rounded to 6
+    * places: (id_a, id_b, `scoreName`). */
+  private def verifyPairs(cands: DataFrame, featA: DataFrame, featB: DataFrame,
+      score: (Column, Column) => Column, scoreName: String,
+      threshold: Double): DataFrame =
+    cands
+      .join(featA.select(col("_id").as("id_a"), col("_f").as("_f_a")), Seq("id_a"))
+      .join(featB.select(col("_id").as("id_b"), col("_f").as("_f_b")), Seq("id_b"))
+      .withColumn(scoreName, score(col("_f_a"), col("_f_b")))
+      .where(col(scoreName) >= threshold)
+      .select(col("id_a"), col("id_b"), round(col(scoreName), 6).as(scoreName))
+
   /** Monitoring view of what a cap would drop: (bucketCols..., bucket_size)
     * for buckets above the cap. Log/inspect this alongside any capped run —
     * a silent drop should never read as full coverage. */
@@ -304,10 +335,6 @@ object Dedup {
       MinHashSignature(ColumnBridge.expression(shinglesCol), numHashes))
   }
 
-  /** LSH candidate pairs: signatures banded into `bands`; docs sharing any
-    * band hash become candidates. Returns (id_a, id_b) with id_a < id_b,
-    * deduped. Collision probability for Jaccard s: 1-(1-s^r)^b. Buckets
-    * larger than `maxBucketSize` are dropped (skew guard, see object doc). */
   /** The exploded (id, band, band-hash) frame behind [[minhashCandidates]] —
     * exposed for the skew-cap audit: `oversizedBuckets(minhashBanded(...),
     * Seq("_band", "_bandhash"), cap)` reports exactly what the capped
@@ -327,17 +354,15 @@ object Dedup {
       .select(col("_id"), col("pos").as("_band"), col("col").as("_bandhash"))
   }
 
+  /** LSH candidate pairs: signatures banded into `bands`; docs sharing any
+    * band hash become candidates. Returns (id_a, id_b) with id_a < id_b,
+    * deduped. Collision probability for Jaccard s: 1-(1-s^r)^b. Buckets
+    * larger than `maxBucketSize` are dropped (skew guard, see object doc). */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val banded = minhashBanded(df, idCol, textCol, shingleLen, numHashes, bands)
-    val capped = capBuckets(banded, Seq("_band", "_bandhash"), maxBucketSize)
-    val a = capped.select(col("_band"), col("_bandhash"), col("_id").as("id_a"))
-    val b = capped.select(col("_band"), col("_bandhash"), col("_id").as("id_b"))
-    a.join(b, Seq("_band", "_bandhash"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-  }
+      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
+    bandedPairs(minhashBanded(df, idCol, textCol, shingleLen, numHashes, bands),
+      Seq("_band", "_bandhash"), maxBucketSize)
 
   /** MinHash LSH near-dup pairs, verified with exact shingle Jaccard:
     * (id_a, id_b, jaccard). The verify join re-reads only (id, text) —
@@ -345,43 +370,34 @@ object Dedup {
     * SETS (the O(len²) `array_distinct` per row) only for ids appearing
     * in some LSH candidate pair, a tiny fraction of the corpus, so the
     * candidate-id set (materialized ids-only via `localCheckpoint`, the
-    * cascade lineage discipline) is broadcast as a left-semi prefilter
-    * under the set projection (guide §3.2's semi-join shape). The
-    * previous form computed shingle sets for EVERY corpus row and fed
-    * them into both verify joins — two full-corpus set materializations
-    * whose rows were then almost all discarded (measured r9: see
-    * OPTIMIZATION_r09.md). Candidate ids are pair-bounded; a corpus whose
-    * candidate set outgrows broadcast needs the Bloom-prefilter variant
-    * instead (the decontaminateBloom shape).
+    * cascade lineage discipline) is a left-semi prefilter under the set
+    * projection (guide §3.2's semi-join shape). The previous form computed
+    * shingle sets for EVERY corpus row and fed them into both verify
+    * joins — two full-corpus set materializations whose rows were then
+    * almost all discarded (measured r9: see OPTIMIZATION_r09.md).
     *
-    * `verifyPrefilter = false` keeps the original lazy single-action plan
-    * (shingle sets computed for every input row): right when the INPUT is
-    * already bounded small by the caller's contract — e.g.
-    * [[incrementalMinhash]]'s append batch — where the prefilter's extra
-    * materialization job outweighs the skipped set computation (measured
-    * r9: q58's ~100-row batch paid 0.45 → 1.0 s under the prefilter;
-    * OPTIMIZATION_r09.md). Identical results either way. */
+    * Size rule: an `Observation` on that same checkpoint counts the
+    * candidate pairs (no extra job). The id set is at most 16 B × pairs
+    * (two longs per pair), so it is broadcast while 16 B × pairs ≤ the
+    * session's `spark.sql.autoBroadcastJoinThreshold`; above that, or when
+    * the threshold is ≤ 0, the prefilter is a plain left-semi join that
+    * degrades to a sort-merge join instead of overflowing the driver. */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, shingleLen: Int = 3,
       numHashes: Int = 64, bands: Int = 16,
-      maxBucketSize: Int = DefaultMaxBucketSize,
-      verifyPrefilter: Boolean = true): DataFrame = {
-    val cands0 = minhashCandidates(df, idCol, textCol, shingleLen, numHashes,
-      bands, maxBucketSize)
-    val cands = if (verifyPrefilter) cands0.localCheckpoint() else cands0
-    val sh0 = ensureParallelism(df)
-    val sh = (if (verifyPrefilter) {
-      val candIds = cands.select(col("id_a").as(idCol))
-        .unionByName(cands.select(col("id_b").as(idCol))).distinct()
-      sh0.join(broadcast(candIds), Seq(idCol), "left_semi")
-    } else sh0)
-      .select(col(idCol), shingleSet(col(textCol), shingleLen).as("_sh"))
-    cands
-      .join(sh.select(col(idCol).as("id_a"), col("_sh").as("_sh_a")), Seq("id_a"))
-      .join(sh.select(col(idCol).as("id_b"), col("_sh").as("_sh_b")), Seq("id_b"))
-      .withColumn("jaccard", jaccard(col("_sh_a"), col("_sh_b")))
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
+    val counted = org.apache.spark.sql.Observation()
+    val cands = minhashCandidates(df, idCol, textCol, shingleLen, numHashes,
+      bands, maxBucketSize).observe(counted, count(lit(1)).as("n")).localCheckpoint()
+    val pairs = counted.get.apply("n").asInstanceOf[Long]
+    val candIds = cands.select(col("id_a").as(idCol))
+      .unionByName(cands.select(col("id_b").as(idCol))).distinct()
+    val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val prefilter =
+      if (limit > 0 && 16L * pairs <= limit) broadcast(candIds) else candIds
+    val sh = ensureParallelism(df).join(prefilter, Seq(idCol), "left_semi")
+      .select(col(idCol).as("_id"), shingleSet(col(textCol), shingleLen).as("_f"))
+    verifyPairs(cands, sh, sh, jaccard, "jaccard", threshold)
   }
 
   // ------------------------------------------------------------- simhash
@@ -449,12 +465,6 @@ object Dedup {
   /** Hamming distance between two simhashes. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** SimHash near-dup pairs with Hamming ≤ maxHamming, found by the
-    * pigeonhole chunk trick: split the `bits`-wide hash into `maxHamming+1`
-    * chunks — any pair within the bound must agree on ≥1 whole chunk, so
-    * bucketing by (chunk_idx, chunk_value) finds ALL of them (exact recall)
-    * without an all-pairs join. Oversized chunk buckets are dropped
-    * (skew guard — see object doc). */
   /** The exploded (id, sim, chunk, chunk-value) frame behind
     * [[simhashNearDups]] — exposed for the skew-cap audit (see
     * [[minhashBanded]]). */
@@ -476,23 +486,21 @@ object Dedup {
       .select(col("_id"), col("_sim"), col("pos").as("_chunk"), col("col").as("_cv"))
   }
 
+  /** SimHash near-dup pairs with Hamming ≤ maxHamming, found by the
+    * pigeonhole chunk trick: split the `bits`-wide hash into `maxHamming+1`
+    * chunks — any pair within the bound must agree on ≥1 whole chunk, so
+    * bucketing by (chunk_idx, chunk_value) finds ALL of them (exact recall)
+    * without an all-pairs join. Oversized chunk buckets are dropped
+    * (skew guard — see object doc). */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, bits: Int = 64,
       family: TokenHashFamily = TokenHashFamily.XxHash64,
-      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val banded = simhashBanded(df, idCol, textCol, maxHamming, bits, family)
-    val capped = capBuckets(banded, Seq("_chunk", "_cv"), maxBucketSize)
-    val a = capped.select(col("_chunk"), col("_cv"),
-      col("_id").as("id_a"), col("_sim").as("_sim_a"))
-    val b = capped.select(col("_chunk"), col("_cv"),
-      col("_id").as("id_b"), col("_sim").as("_sim_b"))
-    a.join(b, Seq("_chunk", "_cv"))
-      .where(col("id_a") < col("id_b"))
+      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
+    bandedPairs(simhashBanded(df, idCol, textCol, maxHamming, bits, family),
+        Seq("_chunk", "_cv"), maxBucketSize, carry = Seq("_sim"))
       .select(col("id_a"), col("id_b"),
         hamming64(col("_sim_a"), col("_sim_b")).cast("int").as("hamming"))
       .where(col("hamming") <= maxHamming)
-      .distinct()
-  }
 
   // ------------------------------------------------- decontamination
 
@@ -979,33 +987,27 @@ object Dedup {
       bandedStore: DataFrame, shStore: DataFrame, threshold: Double = 0.8,
       shingleLen: Int = 3, numHashes: Int = 64, bands: Int = 16,
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val batchBanded = capBuckets(
-      minhashBanded(batch, idCol, textCol, shingleLen, numHashes, bands),
-      Seq("_band", "_bandhash"), maxBucketSize)
-    val corpusCands = batchBanded
+    val keys = Seq("_band", "_bandhash")
+    val batchBanded = minhashBanded(batch, idCol, textCol, shingleLen, numHashes, bands)
+    val corpusCands = capBuckets(batchBanded, keys, maxBucketSize)
       .join(bandedStore.select(col(idCol).as("_cid"),
-        col("band").as("_band"), col("bandhash").as("_bandhash")),
-        Seq("_band", "_bandhash"))
-      .select(col("_id"), col("_cid")).distinct()
+        col("band").as("_band"), col("bandhash").as("_bandhash")), keys)
+      .select(col("_id").as("id_a"), col("_cid").as("id_b")).distinct()
     val batchSh = ensureParallelism(batch)
-      .select(col(idCol).as("_id"), shingleSet(col(textCol), shingleLen).as("_sh"))
-    val corpusBest = corpusCands
-      .join(batchSh, Seq("_id"))
-      .join(shStore.select(col(idCol).as("_cid"), col("shingles").as("_csh")),
-        Seq("_cid"))
-      .withColumn("_j", jaccard(col("_sh"), col("_csh")))
-      .where(col("_j") >= threshold)
-      .groupBy(col("_id"))
-      .agg(min(struct(col("_cid"), col("_j"))).as("_best"))
-      .select(col("_id").as(idCol), col("_best._cid").as("_corpus_keeper"),
-        col("_best._j").as("_cj"))
-    // verifyPrefilter OFF: the batch is the bounded ingest increment by
-    // this operator's contract — the prefilter's extra materialization
-    // job costs more than it saves on a bounded input (see the
-    // minhashNearDups scaladoc)
-    val batchBest = minhashNearDups(batch, idCol, textCol, threshold,
-        shingleLen, numHashes, bands, maxBucketSize,
-        verifyPrefilter = false)
+      .select(col(idCol).as("_id"), shingleSet(col(textCol), shingleLen).as("_f"))
+    val corpusBest = verifyPairs(corpusCands, batchSh,
+        shStore.select(col(idCol).as("_id"), col("shingles").as("_f")),
+        jaccard, "jaccard", threshold)
+      .groupBy(col("id_a"))
+      .agg(min(struct(col("id_b"), col("jaccard"))).as("_best"))
+      .select(col("id_a").as(idCol), col("_best.id_b").as("_corpus_keeper"),
+        col("_best.jaccard").as("_cj"))
+    // in-batch matches reuse the batch's banded and shingle frames, with no
+    // candidate-id prefilter: the batch is the bounded ingest increment by
+    // this operator's contract, so the whole plan stays lazy (measured r9:
+    // a prefilter's materialization job doubled q58's batch time)
+    val batchBest = verifyPairs(bandedPairs(batchBanded, keys, maxBucketSize),
+        batchSh, batchSh, jaccard, "jaccard", threshold)
       .groupBy(col("id_b"))
       .agg(min(struct(col("id_a"), col("jaccard"))).as("_best"))
       .select(col("id_b").as(idCol), col("_best.id_a").as("_batch_keeper"),
@@ -1020,8 +1022,8 @@ object Dedup {
         when(col("_corpus_keeper").isNotNull, col("_corpus_keeper"))
           .when(col("_batch_keeper").isNotNull, col("_batch_keeper"))
           .as("dup_of"),
-        round(when(col("_corpus_keeper").isNotNull, col("_cj"))
-          .otherwise(col("_bj")), 6).as("jaccard"))
+        when(col("_corpus_keeper").isNotNull, col("_cj"))
+          .otherwise(col("_bj")).as("jaccard"))
   }
 
   // -------------------------------------------------------------- cascade
@@ -1112,17 +1114,11 @@ object Dedup {
     // the ids-only candidate dedup (same shape as Similarity.lshTopK).
     // Buckets come from the native codegen expression — all tables in one
     // per-row loop (Similarity.tableBuckets).
-    val base = df.select(col(idCol).as("_id"), col(vecCol).as("_v"))
+    val base = df.select(col(idCol).as("_id"), col(vecCol).as("_f"))
     val banded = base
       .select(col("_id"),
-        posexplode(Similarity.tableBuckets(col("_v"), dim, planes, tables, seed)))
+        posexplode(Similarity.tableBuckets(col("_f"), dim, planes, tables, seed)))
       .select(col("_id"), struct(col("pos").as("t"), col("col").as("b")).as("_tb"))
-    val capped = capBuckets(banded, Seq("_tb"), maxBucketSize)
-    val a = capped.select(col("_tb"), col("_id").as("id_a"))
-    val b = capped.select(col("_tb"), col("_id").as("id_b"))
-    val candIds = a.join(b, Seq("_tb"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
     // NOTE (r9): a minhash-style candidate-id semi-join prefilter was
     // tried here and REVERTED after measurement — unlike the shingle-set
     // verify (where the prefilter saves an O(len²) per-row computation
@@ -1133,11 +1129,7 @@ object Dedup {
     // plain join degrades gracefully to SMJ. The prefilter only added an
     // eager materialization job (q18 0.64 → 1.07 s measured). See
     // OPTIMIZATION_r09.md.
-    candIds
-      .join(base.select(col("_id").as("id_a"), col("_v").as("_va")), Seq("id_a"))
-      .join(base.select(col("_id").as("id_b"), col("_v").as("_vb")), Seq("id_b"))
-      .withColumn("cosine", Similarity.cosine(col("_va"), col("_vb")))
-      .where(col("cosine") >= cosThreshold)
-      .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
+    verifyPairs(bandedPairs(banded, Seq("_tb"), maxBucketSize), base, base,
+      Similarity.cosine, "cosine", cosThreshold)
   }
 }

@@ -211,10 +211,6 @@ final case class TableSpec(
   def requiredColumns(alias: AliasType = AliasType.Serialization): Seq[String] =
     columns.filterNot(_.nullable).map(_.nameFor(alias))
 
-  /** Columns flagged unique (`ColumnInfo.is_unique`, declared-but-unenforced
-    * in the reference — SURVEY.md §2.5; we enforce via UniquenessCheck). */
-  def uniqueColumns: Seq[ColumnSpec] = columns.filter(_.isUnique)
-
   /** Bidirectional alias rename map, only for columns present in `from`
     * (`rename`, `polars/model.py:184-243`; only columns present in both df
     * and model map, `tests/polars/test_model.py:540-558`). */

@@ -83,13 +83,25 @@ object Similarity {
       HyperplaneBuckets(ColumnBridge.expression(v), dim, planes, tables, seed))
   }
 
-  /** Shared tail of every top-k variant: per-query rank by (cosine desc,
-    * neighbor_id) — ONE definition so the tiebreak and output contract
-    * cannot drift between the brute-force baseline and the ANN paths. */
-  private def topK(scored: DataFrame, k: Int): DataFrame = {
+  /** Shared tail of every top-k variant: exact cosine per (query, neighbor)
+    * pair, then per-query rank by (cosine desc, neighbor_id) — ONE
+    * definition so the scoring, tiebreak and output contract cannot drift
+    * between the brute-force baseline and the ANN paths. The (small)
+    * query set is broadcast; `candIds` holds the (query_id, neighbor_id)
+    * pairs an ANN index selected, or is None to score every corpus row
+    * against every query (brute force). */
+  private def topK(corpus: DataFrame, queries: DataFrame, idCol: String,
+      vecCol: String, candIds: Option[DataFrame], k: Int): DataFrame = {
+    val vecs = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"))
+    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv")))
+    val pairs = candIds match {
+      case Some(c) => vecs.join(c, Seq("neighbor_id")).join(q, Seq("query_id"))
+      case None => vecs.crossJoin(q).where(col("neighbor_id") =!= col("query_id"))
+    }
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("_rn", row_number().over(w))
+    pairs.withColumn("cosine", cosine(col("_qv"), col("_cv")))
+      .withColumn("_rn", row_number().over(w))
       .where(col("_rn") <= k)
       .select(col("query_id"), col("neighbor_id"),
         round(col("cosine"), 6).as("cosine"), col("_rn").as("rank"))
@@ -100,15 +112,8 @@ object Similarity {
     * per-query top-k via window. The baseline every ANN variant is verified
     * against. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("_qv")))
-    val scored = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"))
-      .crossJoin(q)
-      .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", cosine(col("_qv"), col("_cv")))
-    topK(scored, k)
-  }
+      vecCol: String, k: Int): DataFrame =
+    topK(corpus, queries, idCol, vecCol, None, k)
 
   /** LSH-bucketed approximate top-k: standard multi-table LSH — `tables`
     * independent hyperplane sets of `planes` bits each; a corpus vector is a
@@ -149,8 +154,6 @@ object Similarity {
       (0 until planes).combinations(h).map(_.foldLeft(0L)((m, p) => m | (1L << p))))
     val probeVariants = array(flips.map(m =>
       struct(col("_own.t").as("t"), col("_own.b").bitwiseXOR(lit(m)).as("b"))): _*)
-    val q = broadcast(queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("_qv")))
     val qProbes = broadcast(queries
       .select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
       .select(col("query_id"),
@@ -169,12 +172,7 @@ object Similarity {
     // against the candidate set. No explicit broadcast hint: the candidate
     // count scales with |Q|·tables·bucket and a forced broadcast is a
     // driver-OOM cliff at scale — AQE picks broadcast when it actually fits.
-    val scored = corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"))
-      .join(candIds, Seq("neighbor_id"))
-      .join(q, Seq("query_id"))
-      .withColumn("cosine", cosine(col("_qv"), col("_cv")))
-    topK(scored, k)
+    topK(corpus, queries, idCol, vecCol, Some(candIds), k)
   }
 
   /** IVF-style coarse quantization stats: assign each vector to its LSH
@@ -345,7 +343,6 @@ object Similarity {
       struct((-x.getField("s")).as("negs"), x.getField("i").as("i")))
     val probeCells = transform(
       slice(array_sort(cellScores), 1, nprobe), x => x.getField("i"))
-    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv")))
     val qProbes = broadcast(queries
       .select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
       .select(col("query_id"), explode(probeCells).as("_cell")))
@@ -354,11 +351,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"))
     // no broadcast hint on candIds: |Q|·(nprobe/nCells)·|corpus| is
     // unbounded — AQE broadcasts when it fits, SMJ otherwise
-    val scored = corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"))
-      .join(candIds, Seq("neighbor_id"))
-      .join(q, Seq("query_id"))
-      .withColumn("cosine", cosine(col("_qv"), col("_cv")))
-    topK(scored, k)
+    topK(corpus, queries, idCol, vecCol, Some(candIds), k)
   }
 }

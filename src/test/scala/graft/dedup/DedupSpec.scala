@@ -51,6 +51,48 @@ class DedupSpec extends AnyFunSuite {
     assert(j12 === 1.0)
   }
 
+  test("minhash verify prefilter: plain semi-join above the broadcast bound, same pairs") {
+    import org.apache.spark.sql.execution.UnionExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    // (pairs, broadcasts over the candidate-id union) of one executed run
+    def run(): (Set[(Long, Long, Double)], Int) = {
+      val df = Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.5)
+      val pairs = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val idBroadcasts = helper.collect(df.queryExecution.executedPlan) {
+        case b: BroadcastExchangeExec => b
+      }.count(b => helper.collect(b) { case u: UnionExec => u }.nonEmpty)
+      (pairs, idBroadcasts)
+    }
+    val (default, defaultBroadcasts) = run()
+    assert(default.nonEmpty)
+    assert(defaultBroadcasts > 0, "small candidate set should broadcast its ids")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val (plain, plainBroadcasts) =
+      try run() finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert(plain === default)
+    assert(plainBroadcasts === 0, "threshold -1 must not broadcast the candidate ids")
+  }
+
+  test("minhashNearDups job count: the pair count rides the existing checkpoint") {
+    // 4 jobs while building (the eager candidate checkpoint) and 8 through
+    // collect, on this corpus: the same as before the pair-count
+    // Observation was attached, so the size rule costs no extra job
+    val sc = spark.sparkContext
+    def jobsSoFar(): Int = {
+      Thread.sleep(500) // status store is fed asynchronously
+      sc.statusTracker.getJobIdsForGroup("mh-jobs").length
+    }
+    sc.setJobGroup("mh-jobs", "minhashNearDups job pin")
+    try {
+      val df = Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.5)
+      assert(jobsSoFar() === 4)
+      df.collect()
+      assert(jobsSoFar() === 8)
+    } finally sc.clearJobGroup()
+  }
+
   test("simhash: identical texts collide, near texts within small hamming") {
     val sims = docs.select($"doc_id", Dedup.simhash64($"text").as("sim"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

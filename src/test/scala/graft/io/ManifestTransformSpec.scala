@@ -71,6 +71,25 @@ class ManifestTransformSpec extends AnyFunSuite {
     assert(written.count() === 20L)
   }
 
+  test("non-canonical numeric partition values round-trip as strings") {
+    // '007' and '1.50' would come back from partition-type inference as
+    // 7 and 1.5, miss the pending filter and record valid_rows=0
+    import spark.implicits._
+    val (manifestDir, outDir) = mkBase()
+    val df = (0L until 20L).map(i => (i, i, if (i % 2 == 0) "007" else "1.50"))
+      .toDF("id", "v", "part")
+    val run = ManifestCheckpoint.runResumableTransform(spark, df, "part",
+      manifestDir, outDir)(s => s.select(col("id"), col("v"), col("_part")))
+    assert(run.toSet === Set("007", "1.50"))
+    val entries = ManifestCheckpoint.latestEntries(
+      spark.read.parquet(manifestDir))
+      .select("partition_value", "total_rows", "error_rows", "valid_rows")
+      .collect().map(r => r.getString(0) ->
+        (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    assert(entries("007") === ((10L, 0L, 10L)))
+    assert(entries("1.50") === ((10L, 0L, 10L)))
+  }
+
   test("a transform that drops _part fails loudly") {
     val (manifestDir, outDir) = mkBase()
     val e = intercept[IllegalArgumentException] {
