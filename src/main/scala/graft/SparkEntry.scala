@@ -98,8 +98,9 @@ object SparkEntry {
   /** Drain a streaming DataFrame through Trigger.AvailableNow into a memory
     * sink and return the sink table — how the q35-q37 streaming queries
     * produce a finite, oracle-comparable result. Sink name and checkpoint
-    * are per-invocation (a bench session may run the query after verify). */
-  /** `statePartitions > 0` overrides `spark.sql.shuffle.partitions` for
+    * are per-invocation (a bench session may run the query after verify).
+    *
+    * `statePartitions > 0` overrides `spark.sql.shuffle.partitions` for
     * the DURATION of the streaming query (restored after): a stateful
     * operator's state-store partition count is fixed to the shuffle
     * partitions of its first batch, and a monitor whose group cardinality

@@ -161,6 +161,51 @@ object ManifestCheckpoint {
     * narrow: the lineage hash is NOT recomputed there, see below). */
   private val ObserveFuseMaxPartitions = 64
 
+  /** Write `df` (carrying a `partition_value` column) under `root`,
+    * replacing exactly the pending partitions' dirs. Dynamic partition
+    * overwrite only replaces partitions that PRODUCE rows — a re-run
+    * partition whose output went to zero would keep its stale files — so
+    * every pending dir is cleared first and the written state always
+    * matches the manifest entry. Hadoop FileSystem (not java.io.File,
+    * which silently no-ops on HDFS/S3) resolved from the output path's own
+    * scheme, and the dir name built with the SAME escaping Spark's
+    * partitioned writer uses (getPartitionPathString: ':', '%', '#', ...
+    * are percent-escaped on disk — a raw string-concat path would miss
+    * those dirs). */
+  private def overwritePending(spark: SparkSession, df: DataFrame,
+      root: String, pending: Seq[String]): Unit = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
+    pending.foreach { p =>
+      val d = new org.apache.hadoop.fs.Path(rootPath,
+        ExternalCatalogUtils.getPartitionPathString("partition_value", p))
+      if (fs.exists(d)) fs.delete(d, true)
+    }
+    df.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic") // only pending dirs replaced
+      .partitionBy("partition_value")
+      .parquet(root)
+  }
+
+  /** Append one manifest entry per pending partition. Entries are built
+    * from the PENDING set, not from a counts frame: a pending partition
+    * with zero rows in the slice (possible only on a metadata-basis
+    * fingerprint naming a partition whose data is gone) has no counts row
+    * — keying off counts would write no entry and re-queue it forever.
+    * Lineage columns come verbatim from the fingerprints the pending diff
+    * was decided on; `metrics` gives (total, error, valid) rows. */
+  private def appendEntries(spark: SparkSession, manifestDir: String,
+      pendingFps: Seq[(String, Long, Long)])(
+      metrics: String => (Long, Long, Long)): Unit = {
+    import spark.implicits._
+    val now = System.currentTimeMillis()
+    pendingFps.map { case (p, cRows, cHash) =>
+      val (total, errors, valid) = metrics(p)
+      ManifestEntry(p, cRows, cHash, total, errors, valid, now)
+    }.toDF().write.mode(SaveMode.Append).parquet(manifestDir)
+  }
+
   /** Validate only pending partitions; write violations under
     * `outDir/violations/partition_value=<v>/` and append manifest entries.
     * Returns the partitions processed this run. Idempotent: re-running
@@ -179,7 +224,6 @@ object ManifestCheckpoint {
   def runResumable(spark: SparkSession, df: DataFrame, spec: TableSpec,
       manifestDir: String, outDir: String,
       fingerprintSource: Option[() => DataFrame] = None): Seq[String] = {
-    import spark.implicits._
     require(spec.partitionCols.size == 1 && spec.keyCols.size == 1,
       "resumable runs checkpoint on a single partition column + single key")
     val partCol = spec.partitionCols.head
@@ -201,7 +245,6 @@ object ManifestCheckpoint {
     val pk = partitionKey(partCol)
     val slice = df.where(pk.isin(pending: _*))
     val run0 = RowValidator.validate(slice, spec)
-    val failed = filter(col(RowValidator.ViolationsCol), _.isNotNull)
     // Per-partition metrics ride the violations write as observe aggregates
     // when the pending set is small (the common resume case — two
     // conditional sums per partition on the write's single pass); past
@@ -215,43 +258,20 @@ object ManifestCheckpoint {
         val obs = org.apache.spark.sql.Observation()
         val aggs = pending.zipWithIndex.flatMap { case (p, i) => Seq(
           sum(when(pk === lit(p), 1L).otherwise(0L)).as(s"total_$i"),
-          sum(when(pk === lit(p) && size(failed) > 0, 1L).otherwise(0L))
+          sum(when(pk === lit(p) && run0.rowFailed, 1L).otherwise(0L))
             .as(s"errors_$i")) }
         Some((obs, run0.copy(annotated =
           run0.annotated.observe(obs, aggs.head, aggs.tail: _*))))
       } else None
     val run = observed.map(_._2).getOrElse(run0)
-    // dynamic partition overwrite only replaces partitions that PRODUCE
-    // rows — a re-validated partition whose violations went to zero would
-    // keep its stale files. Clear every pending partition's dir first so
-    // the written state always matches the manifest entry. Hadoop FileSystem
-    // (not java.io.File, which silently no-ops on HDFS/S3) resolved from the
-    // output path's own scheme, and the dir name built with the SAME
-    // escaping Spark's partitioned writer uses (getPartitionPathString:
-    // ':', '%', '#', ... are percent-escaped on disk — a raw string-concat
-    // path would miss those dirs).
-    locally {
-      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      val vioRoot = new org.apache.hadoop.fs.Path(s"$outDir/violations")
-      val fs = vioRoot.getFileSystem(spark.sessionState.newHadoopConf())
-      pending.foreach { p =>
-        val d = new org.apache.hadoop.fs.Path(vioRoot,
-          ExternalCatalogUtils.getPartitionPathString("partition_value", p))
-        if (fs.exists(d)) fs.delete(d, true)
-      }
-    }
-    run.violations
-      .withColumn("partition_value", partitionKey(partCol))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic") // only pending dirs replaced
-      .partitionBy("partition_value")
-      .parquet(s"$outDir/violations")
-    val now = System.currentTimeMillis()
+    overwritePending(spark,
+      run.violations.withColumn("partition_value", pk),
+      s"$outDir/violations", pending)
     // Per-partition (total, errors): from the Observation the write just
     // fired (zero extra jobs), or — past the fuse cap — one grouped
     // aggregation over the slice reading only the partition key and the
     // violations annotation (payload columns pruned).
-    val counts: Seq[(String, Long, Long)] = observed match {
+    val counts: Map[String, (Long, Long)] = observed match {
       case Some((obs, _)) =>
         val m = obs.get
         pending.zipWithIndex.map { case (p, i) =>
@@ -259,30 +279,20 @@ object ManifestCheckpoint {
           // on a metadata-basis fingerprint naming a partition with no
           // rows) — record zeros so the partition still completes
           def n(k: String) = Option(m(k)).fold(0L)(_.asInstanceOf[Long])
-          (p, n(s"total_$i"), n(s"errors_$i"))
-        }
+          p -> (n(s"total_$i"), n(s"errors_$i"))
+        }.toMap
       case None =>
+        val aggs = run.outcomeCounts
         run.annotated
           .groupBy(pk.as("partition_value"))
-          .agg(count(lit(1)).as("total_rows"),
-            coalesce(sum(when(size(failed) > 0, 1L).otherwise(0L)), lit(0L))
-              .as("error_rows"))
+          .agg(aggs.head, aggs.tail: _*)
           .collect() // O(#pending partitions) — driver-safe by construction
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+          .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     }
-    // Entries are built from the PENDING set, not from the counts frame: a
-    // pending partition with zero rows in the slice (possible only on a
-    // metadata-basis fingerprint naming a partition whose data is gone)
-    // produces no grouped-agg row — keying off counts would then write no
-    // entry and re-queue it forever. Lineage columns come verbatim from
-    // the fingerprints the pending diff was decided on (both bases).
-    val countByPartition =
-      counts.map { case (p, t, e) => p -> (t, e) }.toMap
-    val entries = pendingFps.map { case (p, cRows, cHash) =>
-      val (total, errors) = countByPartition.getOrElse(p, (0L, 0L))
-      ManifestEntry(p, cRows, cHash, total, errors, total - errors, now)
+    appendEntries(spark, manifestDir, pendingFps) { p =>
+      val (total, errors) = counts.getOrElse(p, (0L, 0L))
+      (total, errors, total - errors)
     }
-    entries.toDF().write.mode(SaveMode.Append).parquet(manifestDir)
     pending
   }
 
@@ -306,7 +316,6 @@ object ManifestCheckpoint {
   def runResumableTransform(spark: SparkSession, df: DataFrame,
       partitionCol: String, manifestDir: String, outDir: String)(
       transform: DataFrame => DataFrame): Seq[String] = {
-    import spark.implicits._
     val pendingFps = pendingAgainstManifest(spark,
       fingerprints(df, partitionCol), manifestDir)
     val pending = pendingFps.map(_._1)
@@ -317,25 +326,8 @@ object ManifestCheckpoint {
     require(out.columns.contains("_part"),
       "transform must preserve the _part partition-label column")
     val dataRoot = s"$outDir/data"
-    // clear pending dirs first (same rationale and escaping as the
-    // violations write above: dynamic overwrite only replaces partitions
-    // that produce rows, and partition values are percent-escaped on disk)
-    locally {
-      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      val root = new org.apache.hadoop.fs.Path(dataRoot)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      pending.foreach { p =>
-        val d = new org.apache.hadoop.fs.Path(root,
-          ExternalCatalogUtils.getPartitionPathString("partition_value", p))
-        if (fs.exists(d)) fs.delete(d, true)
-      }
-    }
-    out.withColumnRenamed("_part", "partition_value")
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("partition_value")
-      .parquet(dataRoot)
-    val now = System.currentTimeMillis()
+    overwritePending(spark, out.withColumnRenamed("_part", "partition_value"),
+      dataRoot, pending)
     val rowsIn = slice.groupBy(col("_part").as("partition_value"))
       .agg(count(lit(1)).as("n")).collect() // O(#pending) — narrow scan
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -348,16 +340,15 @@ object ManifestCheckpoint {
       .where(col("partition_value").isin(pending: _*))
       .groupBy("partition_value").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val entries = pendingFps.map { case (p, cRows, cHash) =>
+    appendEntries(spark, manifestDir, pendingFps) { p =>
       val in = rowsIn.getOrElse(p, 0L)
       val outN = rowsOut.getOrElse(p, 0L)
       // error_rows = rows the transform DROPPED, clamped at zero: the
       // transform contract lets output counts grow freely, and a negative
       // "drop count" in the manifest would misread downstream (round-8
       // advice; only meaningful for row-filtering transforms)
-      ManifestEntry(p, cRows, cHash, in, math.max(0L, in - outN), outN, now)
+      (in, math.max(0L, in - outN), outN)
     }
-    entries.toDF().write.mode(SaveMode.Append).parquet(manifestDir)
     pending
   }
 }

@@ -71,6 +71,8 @@ object LateReplay {
       val src = new java.io.File(tmp, s"_b=$b")
       val dst = new java.io.File(dir, s"b$i")
       require(src.isDirectory, s"missing staged batch dir $src")
+      // a re-run on a reused dir replaces the previous batch files
+      if (dst.exists()) org.apache.commons.io.FileUtils.deleteDirectory(dst)
       require(src.renameTo(dst), s"cannot move $src to $dst")
       val files = dst.listFiles().filter(_.getName.endsWith(".parquet"))
       require(files.length == 1,
@@ -90,8 +92,9 @@ object LateReplay {
     * late (window, key) groups the watermark dropped (summed over
     * micro-batch progress; see the metric note above).
     * Windows still open when the replay ends are NOT emitted (append
-    * mode) — writers append trailing flush batches to finalize. */
-  /** `statePartitions > 0` overrides shuffle partitions for the duration
+    * mode) — writers append trailing flush batches to finalize.
+    *
+    * `statePartitions > 0` overrides shuffle partitions for the duration
     * of the replay query (restored after): replay-gate state is one count
     * per live (window, key) — bounded by the watermark horizon — and each
     * state partition pays a commit per TRIGGER, so a multi-batch replay

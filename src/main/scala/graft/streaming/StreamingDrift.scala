@@ -36,18 +36,15 @@ object StreamingDrift {
       compression: Double = 100.0): DataFrame = {
     val agg = DriftCheck.digestUdaf(compression)(
       DriftCheck.digestInput(col(valueCol))).as("digest")
-    stream
+    val windowed = stream
       // watermarks require TIMESTAMP (with tz); parquet/memory event times
       // are often TIMESTAMP_NTZ — cast under the session (UTC) zone
       .withColumn(tsCol, col(tsCol).cast("timestamp"))
       .withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), windowDuration) +: groupCols.map(col): _*)
       .agg(agg)
-      .withColumn("_drift",
-        DriftCheck.evalUdf(reference.toBytes, ksThreshold, psiThreshold)(
-          col("digest")))
-      .select(col("window") +: groupCols.map(col) :+
-        col("_drift._1").as("ks") :+ col("_drift._2").as("psi") :+
-        col("_drift._3").as("drifted"): _*)
+    DriftCheck.withVerdict(windowed, "digest", reference.toBytes,
+      ksThreshold, psiThreshold)
+      .select((("window" +: groupCols) ++ Seq("ks", "psi", "drifted")).map(col): _*)
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.spec.TableSpec
-import graft.validate.RowValidator
+import graft.validate.{RowValidator, ValidationRun}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -15,9 +15,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * monitor stream.
   *
   * Design notes for scale:
-  *  - [[attach]] is a stateless per-row projection — no streaming state, so
-  *    throughput is identical to the batch scan path (codegen'd) and any
-  *    trigger interval works.
+  *  - The violation array ([[RowValidator.validate]]) is a stateless
+  *    per-row projection — no streaming state, so throughput is identical
+  *    to the batch scan path (codegen'd) and any trigger interval works.
   *  - [[start]] uses foreachBatch + batch_id-PARTITIONED dynamic-overwrite
   *    sinks: foreachBatch is only at-least-once (a batch replayed after a
   *    mid-batch crash runs again), so idempotence must come from the write —
@@ -30,10 +30,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamingValidator {
 
-  /** Annotate a (possibly streaming) frame with the violation array. */
-  def attach(stream: DataFrame, spec: TableSpec): DataFrame =
-    RowValidator.annotate(stream, spec)._1
-
   /** Run the full split per micro-batch: violations → `outDir/violations/
     * batch_id=<n>`, clean rows → `outDir/clean/batch_id=<n>` (parquet,
     * batch-partitioned dynamic overwrite — replay-idempotent). */
@@ -42,8 +38,8 @@ object StreamingValidator {
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val run = RowValidator.validate(batch, spec)
-        val annotated = run.annotated.persist()
+        val run0 = RowValidator.validate(batch, spec)
+        val run = run0.copy(annotated = run0.annotated.persist())
         def idempotent(df: DataFrame, path: String): Unit =
           df.withColumn("batch_id", lit(batchId))
             .write.mode("overwrite")
@@ -51,13 +47,9 @@ object StreamingValidator {
             .partitionBy("batch_id")
             .parquet(path)
         try {
-          idempotent(run.copy(annotated = annotated).violations,
-            s"$outDir/violations")
-          idempotent(
-            annotated.where(size(filter(col(RowValidator.ViolationsCol),
-              _.isNotNull)) === 0).drop(RowValidator.ViolationsCol),
-            s"$outDir/clean")
-        } finally { annotated.unpersist(); () }
+          idempotent(run.violations, s"$outDir/violations")
+          idempotent(run.clean, s"$outDir/clean")
+        } finally { run.annotated.unpersist(); () }
       }
       .start()
   }
@@ -81,20 +73,15 @@ object StreamingValidator {
     * partition cols) with total/error counts. */
   def violationRateByWindow(stream: DataFrame, spec: TableSpec, tsCol: String,
       windowDuration: String, watermarkDelay: String): DataFrame = {
-    val annotated = attach(stream, spec)
+    val run = RowValidator.validate(stream, spec)
+    run.annotated
       // watermarks require TIMESTAMP (with tz); parquet event times are
       // often TIMESTAMP_NTZ — cast under the session (UTC) zone
       .withColumn(tsCol, col(tsCol).cast("timestamp"))
-    val failed = filter(col(RowValidator.ViolationsCol), _.isNotNull)
-    annotated
       .withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), windowDuration) +:
         spec.partitionCols.map(col): _*)
-      .agg(
-        count(lit(1)).as("total_rows"),
-        coalesce(sum(when(size(failed) > 0, 1L).otherwise(0L)), lit(0L))
-          .as("error_rows"))
-      .withColumn("error_rate",
-        col("error_rows").cast("double") / col("total_rows"))
+      .agg(run.outcomeCounts.head, run.outcomeCounts.tail: _*)
+      .withColumn("error_rate", ValidationRun.errorRate)
   }
 }

@@ -50,7 +50,11 @@ object AudioInvariantCheck {
     * reference PCM from the clip's own id, return the SNR in dB (−∞ on any
     * decode failure). Single definition shared by [[check]] and the fused
     * [[ValidationSuite]] so the standalone check the oracle validates can
-    * never diverge from the suite's inlined copy. */
+    * never diverge from the suite's inlined copy on SNR. Their transcript
+    * verdicts differ on one row shape, on purpose: an orphan clip (no
+    * catalog row) whose own transcript is NULL fails [[summary]]'s `=`
+    * comparison (q25 oracle: `IS NOT TRUE`) but passes the suite's
+    * NULL-safe `<=>` (q26 oracle: `IS DISTINCT FROM`). */
   def snrUdf(maxSynthMs: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (clipId: String, bytes: Array[Byte], codec: String) =>
       try {

@@ -95,17 +95,25 @@ object DriftCheck {
     DriftReport(ks(reference, current), psi(reference, current, psiBins),
       ksThreshold, psiThreshold)
 
-  /** Shared digest-vs-reference evaluation UDF: (ks, psi, drifted) from a
-    * serialized digest column. One definition serves [[compareGroups]] and
-    * the fused [[ValidationSuite]] so their verdicts cannot diverge. */
-  def evalUdf(refBytes: Array[Byte], ksThreshold: Double,
-      psiThreshold: Double): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (digestBytes: Array[Byte]) =>
+  /** Appends the drift verdict `ks`, `psi`, `drifted` of a serialized
+    * digest column against a reference digest. One definition serves
+    * [[compareGroups]], the fused [[ValidationSuite]] and the streaming
+    * monitor so their verdicts cannot diverge. The UDF result lands in one
+    * struct column first, so it runs once per row, not once per field. */
+  def withVerdict(df: DataFrame, digestCol: String, refBytes: Array[Byte],
+      ksThreshold: Double, psiThreshold: Double): DataFrame = {
+    val eval = udf { (digestBytes: Array[Byte]) =>
       val cur = TDigest.fromBytes(digestBytes)
       val ref = TDigest.fromBytes(refBytes)
       val r = compare(ref, cur, ksThreshold, psiThreshold)
       (r.ks, r.psi, r.drifted)
     }
+    df.withColumn("_drift", eval(col(digestCol)))
+      .withColumn("ks", col("_drift._1"))
+      .withColumn("psi", col("_drift._2"))
+      .withColumn("drifted", col("_drift._3"))
+      .drop("_drift")
+  }
 
   /** EXACT two-sample KS over fixed-width value bins — the two-pass exact
     * alternative the t-digest sketch approximates, and the oracle anchor
@@ -268,11 +276,8 @@ object DriftCheck {
   def compareGroups(df: DataFrame, valueCol: String, groupCols: Seq[String],
       reference: TDigest, ksThreshold: Double = 0.1, psiThreshold: Double = 0.2,
       compression: Double = 100.0): DataFrame = {
-    digestPerGroup(df, valueCol, groupCols, compression)
-      .withColumn("_drift",
-        evalUdf(reference.toBytes, ksThreshold, psiThreshold)(col("digest")))
-      .select(groupCols.map(col) ++ Seq(
-        col("_drift._1").as("ks"), col("_drift._2").as("psi"),
-        col("_drift._3").as("drifted")): _*)
+    withVerdict(digestPerGroup(df, valueCol, groupCols, compression),
+      "digest", reference.toBytes, ksThreshold, psiThreshold)
+      .select((groupCols ++ Seq("ks", "psi", "drifted")).map(col): _*)
   }
 }

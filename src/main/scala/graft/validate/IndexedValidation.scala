@@ -50,14 +50,13 @@ object IndexedValidation {
     val totalRows = indexed.count()
 
     // per-check failing indices, one column-pruned pass
-    val n = run.checks.size + run.missingRequired.size
+    val n = run.checkKeys.size
     val perCheckIdx: Seq[(Int, Seq[Long])] =
       if (n == 0 || totalRows == 0) Seq.tabulate(n)(i => i -> Seq.empty[Long])
       else {
         val collected = run.annotated.select(
-          col(IdxCol) +:
-            (0 until n).map(i =>
-              col(RowValidator.ViolationsCol)(i).isNotNull.as(s"c$i")): _*)
+          col(IdxCol) +: run.checkFailed.zipWithIndex.map { case (f, i) =>
+            f.as(s"c$i") }: _*)
           .collect()
         (0 until n).map { i =>
           i -> collected.filter(_.getBoolean(i + 1)).map(_.getLong(0)).sorted.toSeq
@@ -70,9 +69,7 @@ object IndexedValidation {
     // per required field absent: missing_required_column over ALL rows —
     // except on an empty frame, where no errors are emitted
     // (`tests/polars/test_validate.py:228-254`)
-    val checkList = run.checks.map(c => (c.columnName, c.constraint.id)) ++
-      run.missingRequired.map(m => (m, "missing_required_column"))
-    val errors = checkList.zipWithIndex.flatMap { case ((colName, cid), i) =>
+    val errors = run.checkKeys.zipWithIndex.flatMap { case ((colName, cid), i) =>
       val rows = idxByCheck(i)
       cid match {
         case "not_null" if rows.nonEmpty =>

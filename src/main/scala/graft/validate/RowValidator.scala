@@ -8,10 +8,7 @@ import org.apache.spark.sql.types._
 
 /** One named check = (column, constraint), with a stable position in the
   * per-row violation array so per-check counters need no explode. */
-final case class CheckRef(columnName: String, constraint: Constraint) {
-  def id: String = s"${constraint.id}"
-  def qualified: String = s"$columnName.${constraint.id}"
-}
+final case class CheckRef(columnName: String, constraint: Constraint)
 
 /** Distributed row-level validation — replaces the reference's eager
   * driver-side loop (`/root/reference/src/fastdataframe/polars/model.py:351-466`,
@@ -27,7 +24,10 @@ final case class CheckRef(columnName: String, constraint: Constraint) {
   * counters) all derive without any driver materialization. Violation rows
   * are keyed by business key, not row index (north rule:
   * `(clip_id, constraint_id, observed_value)`) — global row numbers don't
-  * distribute (SURVEY.md §7.4 risk 3).
+  * distribute (SURVEY.md §7.4 risk 3). [[validate]] builds the array;
+  * [[ValidationRun]] is the only reader of its layout — every consumer
+  * (summary, errors, clean split, the fused suite, the streaming monitors,
+  * the checkpoint metrics) counts outcomes through its members.
   *
   * Scale notes (100 TB / 10^12 rows):
   *  - The violation array is computed in the scan's projection: no shuffle,
@@ -40,7 +40,7 @@ final case class CheckRef(columnName: String, constraint: Constraint) {
   */
 object RowValidator {
 
-  val ViolationsCol = "_graft_violations"
+  private[validate] val ViolationsCol = "_graft_violations"
 
   private val violStruct = (name: String, cid: String, obs: Column) =>
     struct(lit(name).as("column_name"), lit(cid).as("constraint_id"),
@@ -55,8 +55,8 @@ object RowValidator {
 
   /** All (column, constraint) checks for the columns present in `schema`;
     * required-but-absent columns are returned separately. */
-  def planChecks(spec: TableSpec, schema: StructType,
-      alias: AliasType = AliasType.Serialization): (Seq[CheckRef], Seq[String]) = {
+  private def planChecks(spec: TableSpec, schema: StructType,
+      alias: AliasType): (Seq[CheckRef], Seq[String]) = {
     val present = schema.fieldNames.toSet
     val checks = spec.columns.flatMap { c =>
       val n = c.nameFor(alias)
@@ -69,7 +69,7 @@ object RowValidator {
   }
 
   /** The per-row violation entry for one check: NULL iff the check passes. */
-  def violationExpr(spec: TableSpec, check: CheckRef): Column = {
+  private def violationExpr(spec: TableSpec, check: CheckRef): Column = {
     val cSpec = spec.columns.find(c => c.name == check.columnName ||
       c.serializationAlias.contains(check.columnName) ||
       c.validationAlias.contains(check.columnName)).get
@@ -78,9 +78,10 @@ object RowValidator {
       violStruct(check.columnName, check.constraint.id, observed(c, cSpec.dataType)))
   }
 
-  /** df + the fixed-position violation array. */
-  def annotate(df: DataFrame, spec: TableSpec,
-      alias: AliasType = AliasType.Serialization): (DataFrame, Seq[CheckRef], Seq[String]) = {
+  /** df + the fixed-position violation array, read through the returned
+    * [[ValidationRun]]. */
+  def validate(df: DataFrame, spec: TableSpec,
+      alias: AliasType = AliasType.Serialization): ValidationRun = {
     val (checks, missing) = planChecks(spec, df.schema, alias)
     val entries: Seq[Column] =
       checks.map(violationExpr(spec, _)) ++
@@ -93,20 +94,16 @@ object RowValidator {
         StructField("constraint_id", StringType),
         StructField("observed_value", StringType)))))
     else array(entries: _*)
-    (df.withColumn(ViolationsCol, arr), checks, missing)
-  }
-
-  def validate(df: DataFrame, spec: TableSpec,
-      alias: AliasType = AliasType.Serialization): ValidationRun = {
-    val (annotated, checks, missing) = annotate(df, spec, alias)
-    ValidationRun(df, annotated, spec, checks, missing)
+    ValidationRun(df.withColumn(ViolationsCol, arr), spec, checks, missing)
   }
 }
 
 /** Lazy handles over the annotated plan; each member is its own Spark plan
-  * (no eager work at construction). */
+  * (no eager work at construction). The ONE reader of the violation-array
+  * layout: everything else builds on the column members below, which
+  * resolve by name against `annotated` or any projection that carries
+  * [[violationArray]] through. */
 final case class ValidationRun(
-    source: DataFrame,
     annotated: DataFrame,
     spec: TableSpec,
     checks: Seq[CheckRef],
@@ -119,6 +116,40 @@ final case class ValidationRun(
 
   private def failedEntries: Column =
     filter(col(ViolationsCol), _.isNotNull)
+
+  private def countWhere(c: Column): Column =
+    coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
+
+  /** The violation array itself, for narrowing projections that must carry
+    * it to a later aggregation over this run's members. */
+  def violationArray: Column = col(ViolationsCol)
+
+  /** (column, constraint id) per array position: the declared checks, then
+    * one `missing_required_column` entry per absent required column. */
+  def checkKeys: Seq[(String, String)] =
+    checks.map(c => (c.columnName, c.constraint.id)) ++
+      missingRequired.map(m => (m, "missing_required_column"))
+
+  /** Per-position failure flags, aligned with [[checkKeys]]. */
+  def checkFailed: Seq[Column] =
+    checkKeys.indices.map(i => col(ViolationsCol)(i).isNotNull)
+
+  /** TRUE iff the row fails at least one check. */
+  def rowFailed: Column = size(failedEntries) > 0
+
+  /** `total_rows` and `error_rows` aggregates. */
+  def outcomeCounts: Seq[Column] = Seq(
+    count(lit(1)).as("total_rows"),
+    countWhere(rowFailed).as("error_rows"))
+
+  /** `violations_by_constraint` (`column.constraint` → failing rows) as a
+    * positional-counter aggregate — no explode; empty when nothing is
+    * checked. */
+  def constraintCounts: Seq[Column] =
+    if (checkKeys.isEmpty) Nil
+    else Seq(map_from_arrays(
+      array(checkKeys.map { case (c, id) => lit(s"$c.$id") }: _*),
+      array(checkFailed.map(countWhere): _*)).as("violations_by_constraint"))
 
   /** Row-level violations: (keys..., partitions..., column_name,
     * constraint_id, observed_value). Column-pruned: only key/partition/check
@@ -138,34 +169,14 @@ final case class ValidationRun(
     annotated.where(size(failedEntries) === 0).drop(ViolationsCol)
 
   /** Per-partition pass/fail summary with per-constraint counters — one
-    * partial-aggregated job, no explode (positional counters over the fixed
-    * array layout). */
+    * partial-aggregated job, no explode. */
   def summary: DataFrame = {
-    val n = checks.size + missingRequired.size
-    val perCheck: Seq[Column] = (0 until n).map { i =>
-      coalesce(sum(when(col(ViolationsCol)(i).isNotNull, 1L).otherwise(0L)), lit(0L))
-    }
-    val ids: Seq[String] =
-      checks.map(_.qualified) ++ missingRequired.map(m => s"$m.missing_required_column")
-    val aggs: Seq[Column] = Seq(
-      count(lit(1)).as("total_rows"),
-      coalesce(sum(when(size(failedEntries) > 0, 1L).otherwise(0L)), lit(0L))
-        .as("error_rows")) ++
-      (if (n > 0) Seq(map_from_arrays(
-        array(ids.map(lit): _*),
-        array(perCheck: _*)).as("violations_by_constraint"))
-      else Nil)
+    val aggs = outcomeCounts ++ constraintCounts
     val grouped =
       if (spec.partitionCols.nonEmpty)
         annotated.groupBy(partCols: _*).agg(aggs.head, aggs.tail: _*)
       else annotated.agg(aggs.head, aggs.tail: _*)
-    grouped
-      .withColumn("valid_rows", col("total_rows") - col("error_rows"))
-      // 0-row partition ⇒ error_rate 0.0 / success 1.0 (core/validation.py:41-56)
-      .withColumn("error_rate",
-        when(col("total_rows") === 0, 0.0)
-          .otherwise(col("error_rows").cast(DoubleType) / col("total_rows")))
-      .withColumn("success_rate", lit(1.0) - col("error_rate"))
+    ValidationRun.withRates(grouped)
       .withColumn("passed", col("error_rows") === 0)
   }
 
@@ -177,16 +188,11 @@ final case class ValidationRun(
     * from DataFrame" (:432-433) — except on an empty frame, where the
     * reference emits nothing (`tests/polars/test_validate.py:228-254`). */
   def errors(): Seq[ValidationError] = {
-    val n = checks.size + missingRequired.size
-    val perCheck: Seq[Column] = (0 until n).map { i =>
-      coalesce(sum(when(col(RowValidator.ViolationsCol)(i).isNotNull, 1L)
-        .otherwise(0L)), lit(0L)).as(s"c$i")
-    }
+    val perCheck = checkFailed.zipWithIndex.map { case (f, i) =>
+      countWhere(f).as(s"c$i") }
     val row = annotated.agg(count(lit(1)).as("total"), perCheck: _*).head()
     val total = row.getLong(0)
-    val all = checks.map(c => (c.columnName, c.constraint.id)) ++
-      missingRequired.map(m => (m, "missing_required_column"))
-    all.zipWithIndex.flatMap { case ((colName, cid), i) =>
+    checkKeys.zipWithIndex.flatMap { case ((colName, cid), i) =>
       val cnt = row.getLong(i + 1)
       if (cnt == 0) None
       else Some(cid match {
@@ -199,4 +205,21 @@ final case class ValidationRun(
       })
     }
   }
+}
+
+object ValidationRun {
+
+  /** Error rate from `total_rows`/`error_rows`; a 0-row group reads 0.0
+    * (core/validation.py:41-56). */
+  def errorRate: Column =
+    when(col("total_rows") === 0, 0.0)
+      .otherwise(col("error_rows").cast(DoubleType) / col("total_rows"))
+
+  /** Appends `valid_rows`, `error_rate` and `success_rate` to a frame that
+    * carries [[ValidationRun.outcomeCounts]]. */
+  def withRates(counts: DataFrame): DataFrame =
+    counts
+      .withColumn("valid_rows", col("total_rows") - col("error_rows"))
+      .withColumn("error_rate", errorRate)
+      .withColumn("success_rate", lit(1.0) - col("error_rate"))
 }

@@ -52,14 +52,6 @@ object UniquenessCheck {
       .where(col("dup_count") > 1)
   }
 
-  /** Violation rows in north-rule shape: (key, constraint_id="unique",
-    * observed_value=duplicate count). */
-  def violations(df: DataFrame, keyCol: String): DataFrame =
-    duplicateKeys(df, Seq(keyCol))
-      .select(col(keyCol),
-        lit("unique").as("constraint_id"),
-        col("dup_count").cast("string").as("observed_value"))
-
   /** HyperLogLog++ pre-screen: (approx_distinct, total). When the ratio is
     * ~1 within HLL error, there are (almost certainly) no duplicates and the
     * exact pass can be skipped. */
@@ -96,14 +88,6 @@ object ReferentialCheck {
     val cat = if (broadcastCatalog) broadcast(cat0) else cat0
     keyed.join(cat, keyCols, "left_anti")
   }
-
-  /** North-rule violation shape for a single-column key. */
-  def violations(df: DataFrame, catalog: DataFrame, keyCol: String,
-      broadcastCatalog: Boolean = false): DataFrame =
-    orphans(df, catalog, Seq(keyCol), broadcastCatalog)
-      .select(col(keyCol),
-        lit("ref_integrity").as("constraint_id"),
-        col(keyCol).cast("string").as("observed_value"))
 
   /** Per-group orphan summary: (groupCols..., total, orphan_count). */
   def summary(df: DataFrame, catalog: DataFrame, keyCol: String,

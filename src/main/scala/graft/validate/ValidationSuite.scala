@@ -19,7 +19,11 @@ import org.apache.spark.sql.functions._
   *   4. the sampled audio-decode invariant (SNR vs re-synthesized reference,
   *      transcript equality)
   *
-  * all grouped by the spec's partition columns. Uniqueness needs a shuffle
+  * all grouped by the spec's partition columns. The row-constraint part
+  * (the violation array and every count read from it) comes from
+  * [[RowValidator.validate]]'s [[ValidationRun]], which owns the array
+  * layout; this operator only carries the array through its join.
+  * Uniqueness needs a shuffle
   * keyed by clip_id rather than by partition, so it stays a second,
   * keys-only job ([[UniquenessCheck]]); violation ROWS (not counts) are a
   * third, column-pruned pass only when materialized.
@@ -67,19 +71,19 @@ object ValidationSuite {
     val parts = spec.partitionCols
 
     // ---- scan projection: violation array + sampled decode, then DROP bytes
-    val (annotated0, checks, missing) = RowValidator.annotate(clips, spec)
+    val run = RowValidator.validate(clips, spec)
     val snr = AudioInvariantCheck.snrUdf(cfg.maxSynthMs) // shared definition
     val sampled = SampleFilter.sampledOrAll(col(key), cfg.sampleEvery)
     val narrowCols: Seq[Column] =
       (key +: parts).distinct.map(col) ++ Seq(
-        col(RowValidator.ViolationsCol),
+        run.violationArray,
         DriftCheck.digestInput(col(cfg.driftCol)).as("_drift_val"),
         when(sampled, snr(col(key), col(cfg.payloadCol), col(cfg.codecCol)))
           .as("_snr_db"),
         AudioInvariantCheck.thresholdExpr(col(cfg.codecCol),
           cfg.snrThresholdDb, cfg.codecSnrThresholdsDb).as("_snr_floor"),
         col(cfg.transcriptCol).as("_transcript"))
-    val narrow = annotated0.select(narrowCols: _*)
+    val narrow = run.annotated.select(narrowCols: _*)
 
     // ---- referential join on projected key (also brings ref transcript)
     val cat0 = catalog.select(col(key), col(cfg.transcriptCol).as("_ref_transcript"))
@@ -87,15 +91,9 @@ object ValidationSuite {
     val joined = narrow.join(cat, Seq(key), "left_outer")
 
     // ---- one aggregation: summary + per-check counters + digest + audio
-    val nChecks = checks.size + missing.size
-    val checkIds = checks.map(_.qualified) ++
-      missing.map(m => s"$m.missing_required_column")
-    val failed = filter(col(RowValidator.ViolationsCol), _.isNotNull)
+    // (NULL-safe transcript equality — see AudioInvariantCheck.snrUdf)
     val digestAgg = DriftCheck.digestUdaf(cfg.digestCompression)
-    val aggs: Seq[Column] = Seq(
-      count(lit(1)).as("total_rows"),
-      coalesce(sum(when(size(failed) > 0, 1L).otherwise(0L)), lit(0L))
-        .as("error_rows"),
+    val aggs: Seq[Column] = run.outcomeCounts ++ Seq(
       coalesce(sum(when(col("_ref_transcript").isNull, 1L).otherwise(0L)), lit(0L))
         .as("orphan_rows"),
       digestAgg(col("_drift_val")).as("drift_digest"),
@@ -106,34 +104,16 @@ object ValidationSuite {
       coalesce(sum(when(col("_snr_db").isNotNull &&
         !(col("_transcript") <=> col("_ref_transcript")), 1L).otherwise(0L)),
         lit(0L)).as("transcript_failures")) ++
-      (if (nChecks > 0) Seq(map_from_arrays(
-        array(checkIds.map(lit): _*),
-        array((0 until nChecks).map(i => coalesce(
-          sum(when(col(RowValidator.ViolationsCol)(i).isNotNull, 1L)
-            .otherwise(0L)), lit(0L))): _*)).as("violations_by_constraint"))
-      else Nil)
+      run.constraintCounts
     val grouped =
       if (parts.nonEmpty) joined.groupBy(parts.map(col): _*).agg(aggs.head, aggs.tail: _*)
       else joined.agg(aggs.head, aggs.tail: _*)
 
     // ---- per-group drift verdict vs the reference digest (shared UDF)
-    val finish = cfg.referenceDigest match {
-      case None => grouped
-      case Some(refBytes) =>
-        grouped.withColumn("_d",
-          DriftCheck.evalUdf(refBytes, cfg.ksThreshold, cfg.psiThreshold)(
-            col("drift_digest")))
-          .withColumn("ks", col("_d._1"))
-          .withColumn("psi", col("_d._2"))
-          .withColumn("drifted", col("_d._3"))
-          .drop("_d")
-    }
-    finish
-      .withColumn("valid_rows", col("total_rows") - col("error_rows"))
-      .withColumn("error_rate",
-        when(col("total_rows") === 0, 0.0)
-          .otherwise(col("error_rows").cast("double") / col("total_rows")))
-      .withColumn("success_rate", lit(1.0) - col("error_rate"))
+    val finish = cfg.referenceDigest.fold(grouped)(refBytes =>
+      DriftCheck.withVerdict(grouped, "drift_digest", refBytes,
+        cfg.ksThreshold, cfg.psiThreshold))
+    ValidationRun.withRates(finish)
       .withColumn("passed",
         col("error_rows") === 0 && col("orphan_rows") === 0 &&
           col("snr_failures") === 0 && col("transcript_failures") === 0)

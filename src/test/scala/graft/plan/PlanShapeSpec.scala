@@ -283,6 +283,26 @@ class PlanShapeSpec extends AnyFunSuite {
     // partition (+writes). Batched: pending-scan + violations write +
     // summary/fingerprint agg + manifest append ≈ 4-6 incl. AQE stages.
     assert(jobs > 0 && jobs <= 8, s"expected constant job count, got $jobs")
+    // exact counts on both metrics paths: the observe path's metrics ride
+    // the violations write; 70 pending partitions exceed the observe fuse
+    // cap, and the grouped fallback adds aggregation jobs
+    val spec = TableSpec("t",
+      Seq(ColumnSpec("k", org.apache.spark.sql.types.StringType),
+        ColumnSpec("part", org.apache.spark.sql.types.StringType,
+          constraints = Seq(MaxLength(2)))),
+      keyCols = Seq("k"), partitionCols = Seq("part"))
+    val many = spark.range(700)
+      .select(concat(lit("k"), col("id")).as("k"),
+        concat(lit("p"), col("id") % 70).as("part"))
+    sc.setJobGroup("ckpt-jobs-grouped", "checkpoint job count, grouped path")
+    try {
+      graft.checkpoint.ManifestCheckpoint.runResumable(spark, many, spec,
+        s"$tmp/manifest-grouped", s"$tmp/out-grouped")
+    } finally sc.clearJobGroup()
+    Thread.sleep(500)
+    val groupedJobs =
+      sc.statusTracker.getJobIdsForGroup("ckpt-jobs-grouped").length
+    assert((jobs, groupedJobs) === ((4, 6)))
   }
 
   test("integral Long bound pushes down as a long filter (no lossy cast)") {

@@ -61,4 +61,25 @@ class LateReplaySpec extends AnyFunSuite {
     // flush windows themselves never finalize (append mode, stream ends)
     assert(!wins.exists(_._1 == "flush"))
   }
+
+  test("writeBatches re-run on a reused dir rewrites the same batches") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("late-replay-rerun").toString
+    val rows = (0 until 25).map(i =>
+      (i % 5L, s"k$i", new java.sql.Timestamp(1767268800000L + i * 1000L)))
+      .toDF("batch", "k", "ts")
+    // (parquet files, rows, mtime) per batch dir b0..b4
+    def layout(): Seq[(Int, Long, Long)] = (0 until 5).map { i =>
+      val files = new java.io.File(dir, s"b$i").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      (files.length, spark.read.parquet(files.head.getPath).count(),
+        files.head.lastModified())
+    }
+    assert(LateReplay.writeBatches(rows, "batch", "k", "ts", dir) === 5)
+    val first = layout()
+    assert(first.map(t => (t._1, t._2)) === Seq.fill(5)((1, 5L)))
+    assert(LateReplay.writeBatches(rows, "batch", "k", "ts", dir) === 5)
+    assert(layout() === first)
+    assert(spark.read.parquet(s"$dir/b*").count() === 25L)
+  }
 }

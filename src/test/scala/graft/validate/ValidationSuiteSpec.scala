@@ -26,12 +26,20 @@ class ValidationSuiteSpec extends AnyFunSuite {
     // one row per codec
     assert(suite.count() === 5)
 
-    // row-constraint counts match RowValidator.summary
-    val rvSummary = RowValidator.validate(dirty, ClipsGenerator.spec)
-      .summary.select("codec", "total_rows", "error_rows").collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    suite.select("codec", "total_rows", "error_rows").collect().foreach { r =>
-      assert(rvSummary(r.getString(0)) === ((r.getLong(1), r.getLong(2))))
+    // row-constraint counts, per-constraint counters and rates match
+    // RowValidator.summary per codec
+    val shared = Seq("total_rows", "error_rows", "violations_by_constraint",
+      "valid_rows", "error_rate", "success_rate")
+    def byCodec(df: org.apache.spark.sql.DataFrame) =
+      df.select(("codec" +: shared).map(col): _*).collect()
+        .map(r => r.getString(0) -> shared.indices.map(i => r.get(i + 1)))
+        .toMap
+    val rvSummary = byCodec(RowValidator.validate(dirty, ClipsGenerator.spec)
+      .summary)
+    val suiteSummary = byCodec(suite)
+    assert(suiteSummary.keySet === rvSummary.keySet)
+    suiteSummary.foreach { case (codec, v) =>
+      assert(v === rvSummary(codec), codec)
     }
 
     // referential orphan totals match the anti-join
@@ -67,5 +75,27 @@ class ValidationSuiteSpec extends AnyFunSuite {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(m("transcript.not_null") === 10) // i%1000==7 nulls
     assert(m("sr_hz.maximum") === 2) // i%5000==13
+  }
+
+  test("orphan clip with a NULL transcript: the standalone check counts it, the suite does not") {
+    // AudioInvariantCheck compares with `=` (a NULL comparison is a
+    // failure, as the q25 oracle's IS NOT TRUE), the suite with the
+    // NULL-safe `<=>` (q26's IS DISTINCT FROM): the two agree on every
+    // row except an orphan whose own transcript is NULL
+    // the catalog drops i%1000==3, so clip 3 is the one orphan of 20 rows
+    val orphan = ClipsGenerator.clipId(3)
+    val clips = ClipsGenerator.clips(spark, 20, numPartitions = 1,
+      withErrors = false).toDF()
+      .withColumn("transcript", when($"clip_id" === orphan,
+        lit(null).cast("string")).otherwise($"transcript"))
+    val catalog = ClipsGenerator.catalog(spark, 20, numPartitions = 1)
+    val standalone = AudioInvariantCheck.summary(clips, catalog, sampleEvery = 1)
+    assert(standalone.agg(sum("transcript_failures")).head().getLong(0) === 1L)
+    val suite = ValidationSuite.run(clips, catalog, ClipsGenerator.spec,
+      ValidationSuite.Config(sampleEvery = 1))
+    val totals = suite.agg(sum("orphan_rows"), sum("transcript_failures"))
+      .head()
+    assert(totals.getLong(0) === 1L)
+    assert(totals.getLong(1) === 0L)
   }
 }
