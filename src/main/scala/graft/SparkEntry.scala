@@ -3,6 +3,7 @@ package graft
 import graft.cast.CastPlanner
 import graft.io.{ClipsGenerator, OracleTables}
 import graft.spec._
+import graft.streaming.Drain
 import graft.text.TextAnalysis
 import graft.validate._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -81,116 +82,6 @@ object SparkEntry {
     if (dir.contains("sf0.1")) 200000L
     else if (dir.contains("sf0.01")) 20000L
     else 5000L
-
-  /** Ceiling on rows the streaming-sink detach will copy to the driver —
-    * far above any monitor output (q35-q37 emit 4-20 rows at sf0.01), far
-    * below driver-OOM territory. */
-  val MaxStreamingSinkRows = 1000000L
-
-  /** State partitions for the BOUNDED-group streaming monitors (windowed
-    * aggregations over window × codec/band — tens of live groups at any
-    * corpus size, because windows close under the watermark and the
-    * category axes are fixed): sized to the state bound, not the host —
-    * see [[runAvailableNow]]'s scaladoc for the measured rationale.
-    * Key-scale monitors (q35/q87) deliberately do NOT use this. */
-  val BoundedMonitorStateParts = 4
-
-  /** Drain a streaming DataFrame through Trigger.AvailableNow into a memory
-    * sink and return the sink table — how the q35-q37 streaming queries
-    * produce a finite, oracle-comparable result. Sink name and checkpoint
-    * are per-invocation (a bench session may run the query after verify).
-    *
-    * `statePartitions > 0` overrides `spark.sql.shuffle.partitions` for
-    * the DURATION of the streaming query (restored after): a stateful
-    * operator's state-store partition count is fixed to the shuffle
-    * partitions of its first batch, and a monitor whose group cardinality
-    * is BOUNDED small (window × codec, ~tens of live groups) pays one
-    * state-store commit per partition per trigger for zero extra
-    * parallelism — measured r9: q81's 8-trigger replay drops ~8 s → ~3 s
-    * at 4 state partitions (OPTIMIZATION_r09.md). Scale-safe because it
-    * is sized to the operator's STATE BOUND, not to this host: the
-    * map-side work (scans, decode UDFs, partial aggregation) keeps the
-    * input's own parallelism; only the ≤O(groups) merged partials cross
-    * the exchange. Monitors with row-scale key spaces (q35/q87 key on
-    * clip_id/fingerprint) keep the session default. */
-  private[graft] def runAvailableNow(df: DataFrame, name: String,
-      mode: String, maxRows: Long = MaxStreamingSinkRows,
-      statePartitions: Int = 0): DataFrame = {
-    val s = df.sparkSession
-    val sink = s"${name}_${System.nanoTime()}"
-    // checkpoint on tmpfs when available: the state store snapshots one
-    // entry per key (q35 keys on clip_id — 200k files-worth of sync writes
-    // at sf0.1), and this host throttles syscall-heavy disk I/O (see
-    // BASELINE.md); a real cluster points this at its fast scratch/DFS
-    val ckptBase =
-      if (new java.io.File("/dev/shm").isDirectory) {
-        val d = new java.io.File(s"/dev/shm/graft-ckpt")
-        d.mkdirs(); d.toPath
-      } else java.nio.file.Files.createTempDirectory("graft-ckpt")
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptBase, name).toString
-    // state-store backend (round-4 verdict #5): RocksDB is the DEFAULT —
-    // measured faster than the HDFS-backed provider for these monitors on
-    // this host (q35 at sf0.1, 200k keys in one batch: 2.5-3.0 s vs
-    // 3.8-4.4 s min-of-3 across two draws each; q37 equal-or-better —
-    // numbers in BASELINE.md), and it is also the standard cluster
-    // recommendation for large state (millions of live keys don't live on
-    // the executor heap). SPARK_GRAFT_STATESTORE=hdfs restores Spark's
-    // built-in default for comparison runs.
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    // remember the caller's provider so the RocksDB default cannot leak
-    // into later streaming queries on the shared session (round-5 advice)
-    val prevProvider = s.conf.getOption(ProviderKey)
-    if (!sys.env.get("SPARK_GRAFT_STATESTORE").contains("hdfs"))
-      s.conf.set(ProviderKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val PartsKey = "spark.sql.shuffle.partitions"
-    val prevParts = s.conf.getOption(PartsKey)
-    if (statePartitions > 0) s.conf.set(PartsKey, statePartitions.toString)
-    try {
-      val q = df.writeStream.outputMode(mode)
-        .format("memory").queryName(sink)
-        .option("checkpointLocation", s"$ckpt/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // detach the result from the sink so BOTH per-invocation resources can
-      // be released (round-4 review: repeated bench/verify runs would
-      // otherwise accumulate tmpfs checkpoint dirs and driver-held sink
-      // tables). Monitor outputs are summary-sized by design (dup keys,
-      // orphan ids, window rates), so a driver copy is fine.
-      val sinkDf = s.table(sink)
-      val schema = sinkDf.schema
-      // driver-copy guard (round-4 verdict #7): this detach is sized for
-      // SUMMARY outputs (dup keys, orphan ids, window rates). The memory sink
-      // already holds the rows on the driver, but the extra copy below would
-      // double that; fail loudly if a future query routes a row-scale result
-      // through here instead of silently becoming a driver-OOM path.
-      try {
-        val sinkRows = sinkDf.count()
-        require(sinkRows <= maxRows,
-          s"runAvailableNow($name): sink holds $sinkRows rows > " +
-            s"$maxRows — streaming monitor outputs must be " +
-            "summary-sized; write row-scale results to a file sink instead")
-        val rows = sinkDf.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      } finally {
-        // cleanup runs on the guard path too — a failed invocation must not
-        // leak the tmpfs checkpoint dir or the driver-held sink table
-        s.catalog.dropTempView(sink)
-        try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
-        catch { case _: Exception => () }
-      }
-    } finally {
-      prevProvider match {
-        case Some(v) => s.conf.set(ProviderKey, v)
-        case None => s.conf.unset(ProviderKey)
-      }
-      prevParts match {
-        case Some(v) => s.conf.set(PartsKey, v)
-        case None => s.conf.unset(PartsKey)
-      }
-    }
-  }
 
   /** The materialized clips table as a file-source STREAM (the ingest shape
     * of the north-rule pipeline): schema from the parquet footer, all files
@@ -619,7 +510,7 @@ object SparkEntry {
           lit("2024-01-01 00:00:00").cast("timestamp").as("ts"))
       val counts = graft.streaming.StreamingDedup.duplicateCounts(
         stream, "clip_id", "ts")
-      runAvailableNow(counts.toDF(), "q35", "append")
+      Drain.availableNow(counts.toDF(), "q35", "append").result
         .select(col("key").as("clip_id"), col("dup_count"))
     }),
 
@@ -633,7 +524,7 @@ object SparkEntry {
       val orphans = graft.streaming.StreamingValidator.orphanStream(
         stream, OracleTables.catalog(s, n), Seq("clip_id"),
         broadcastCatalog = true)
-      runAvailableNow(orphans, "q36", "append")
+      Drain.availableNow(orphans, "q36", "append").result
     }),
 
     // Streaming windowed violation-rate monitor
@@ -652,8 +543,8 @@ object SparkEntry {
             coalesce(col("dur_ms").cast("long"), lit(-1L))))
       val rates = graft.streaming.StreamingValidator.violationRateByWindow(
         stream, ClipsGenerator.spec, "ts", "1 hour", "10 minutes")
-      runAvailableNow(rates, "q37", "complete",
-        statePartitions = BoundedMonitorStateParts)
+      Drain.availableNow(rates, "q37", "complete",
+        statePartitions = Drain.BoundedMonitorStateParts).result
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hr"),
           col("codec"), col("total_rows"), col("error_rows"),
@@ -776,8 +667,8 @@ object SparkEntry {
       val mon = graft.streaming.StreamingDrift.monitor(
         stream, "ts", "dur_ms", Seq("codec"), ref,
         windowDuration = "1 hour", watermarkDelay = "10 minutes")
-      runAvailableNow(mon, "q43", "complete",
-        statePartitions = BoundedMonitorStateParts)
+      Drain.availableNow(mon, "q43", "complete",
+        statePartitions = Drain.BoundedMonitorStateParts).result
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hr"),
           col("codec"), col("drifted"))
@@ -1266,8 +1157,8 @@ object SparkEntry {
       val cen = graft.streaming.StreamingCensus.quality(
         stream, "ts", windowDuration = "1 hour",
         watermarkDelay = "10 minutes")
-      runAvailableNow(cen, "q61", "complete",
-        statePartitions = BoundedMonitorStateParts)
+      Drain.availableNow(cen, "q61", "complete",
+        statePartitions = Drain.BoundedMonitorStateParts).result
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hr"),
           col("codec"), col("band"), col("clips"))
@@ -1458,8 +1349,8 @@ object SparkEntry {
         .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
       val cen = StreamingIngest.classifyCounts(stream, "text", store,
         "ts", windowDuration = "1 hour", watermarkDelay = "10 minutes")
-      runAvailableNow(cen, "q70", "complete",
-        statePartitions = BoundedMonitorStateParts)
+      Drain.availableNow(cen, "q70", "complete",
+        statePartitions = Drain.BoundedMonitorStateParts).result
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hr"),
           col("status"), col("docs"))
@@ -1670,26 +1561,20 @@ object SparkEntry {
         lit("flush").as("k"),
         timestamp_seconds((lit(120) + col("id") * 5) * 60 + 30 + 1767268800L)
           .as("ts"))
-      // replay input on tmpfs when available (the runAvailableNow
-      // checkpoint rationale: syscall-heavy small-file I/O is what this
-      // host throttles; a cluster points this at fast scratch), and
-      // DELETED after the counts materialize — the previous per-invocation
-      // /tmp temp dir leaked a full 6-batch copy of the events table every
-      // run (round-8 advice)
-      val replayRoot =
-        if (new java.io.File("/dev/shm").isDirectory) {
-          val d = new java.io.File("/dev/shm/graft-latereplay")
-          d.mkdirs(); d.toPath
-        } else java.nio.file.Files.createTempDirectory("graft-latereplay")
+      // replay input on the drain's tmpfs scratch, DELETED after the
+      // counts materialize — the previous per-invocation /tmp temp dir
+      // leaked a full 6-batch copy of the events table every run
+      // (round-8 advice)
       val replayDir = java.nio.file.Files
-        .createTempDirectory(replayRoot, "run").toString
+        .createTempDirectory(Drain.scratchRoot("graft-latereplay"), "run")
+        .toString
       try {
         LateReplay.writeBatches(data.unionByName(flush), "batch", "k", "ts",
           replayDir)
         // windowCounts detaches its result from the sink (local rows), so
         // the replay input can be deleted as soon as it returns
         LateReplay.windowCounts(s, replayDir, "1 minute", "5 minutes",
-          statePartitions = BoundedMonitorStateParts)
+          statePartitions = Drain.BoundedMonitorStateParts)
           .where(col("kind") =!= "window" || col("k") =!= "flush")
       } finally {
         try org.apache.commons.io.FileUtils
@@ -1868,7 +1753,7 @@ object SparkEntry {
           lit("2024-01-01 00:00:00").cast("timestamp").as("ts"))
       val counts = graft.streaming.StreamingDedup.duplicateCounts(
         stream, "fingerprint", "ts")
-      runAvailableNow(counts.toDF(), "q87", "append")
+      Drain.availableNow(counts.toDF(), "q87", "append").result
         .select(col("key").as("fingerprint"), col("dup_count"))
     }),
 

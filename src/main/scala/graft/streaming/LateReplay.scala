@@ -37,6 +37,11 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * watermark horizon; the replay input is written once per batch and
   * read in place; the only driver copies are the summary-sized sink
   * (guarded) and O(batches) progress records.
+  *
+  * The replay ends in the same [[Drain.availableNow]] as the single-batch
+  * monitors (checkpoint, state store, state partitions, sink guard and
+  * cleanup); this operator adds only the batch layout and the drop count
+  * read from the drain's progress.
   */
 object LateReplay {
 
@@ -66,7 +71,10 @@ object LateReplay {
       // AQE-coalesced, so each batch stays whole in one task and its
       // partition dir gets exactly one file
       .repartition(math.max(batches.length, 1), col("_b"))
-      .write.mode("overwrite").partitionBy("_b").parquet(tmp)
+      // 0 = unlimited, whatever the session's maxRecordsPerFile says: a
+      // batch split over several files would replay as several batches
+      .write.mode("overwrite").option("maxRecordsPerFile", 0L)
+      .partitionBy("_b").parquet(tmp)
     batches.zipWithIndex.foreach { case (b, i) =>
       val src = new java.io.File(tmp, s"_b=$b")
       val dst = new java.io.File(dir, s"b$i")
@@ -94,17 +102,13 @@ object LateReplay {
     * Windows still open when the replay ends are NOT emitted (append
     * mode) — writers append trailing flush batches to finalize.
     *
-    * `statePartitions > 0` overrides shuffle partitions for the duration
-    * of the replay query (restored after): replay-gate state is one count
-    * per live (window, key) — bounded by the watermark horizon — and each
-    * state partition pays a commit per TRIGGER, so a multi-batch replay
-    * at session-wide partitioning spends most of its wall on empty state
-    * commits (measured r9: 8 triggers × 32 partitions ≈ 8 s → ≈ 3 s at 4;
-    * OPTIMIZATION_r09.md). Sized to the state bound, not the host; the
-    * emitted counts and the drop metric are partition-layout-invariant
-    * (one merged partial per group, see the object doc). */
+    * `statePartitions` is [[Drain.availableNow]]'s: replay-gate state is
+    * one count per live (window, key), bounded by the watermark horizon,
+    * so [[Drain.BoundedMonitorStateParts]] fits it. The emitted counts and
+    * the drop metric are partition-layout-invariant (one merged partial
+    * per group, see the object doc). */
   def windowCounts(spark: SparkSession, dir: String, windowDuration: String,
-      delay: String, maxRows: Long = 1000000L,
+      delay: String, maxRows: Long = Drain.MaxStreamingSinkRows,
       statePartitions: Int = 0): DataFrame = {
     val agg = spark.readStream
       .schema("k STRING, ts TIMESTAMP")
@@ -117,65 +121,19 @@ object LateReplay {
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
           .as("window_start"),
         col("n_rows"))
-
-    // same run hygiene as SparkEntry.runAvailableNow (tmpfs checkpoint,
-    // RocksDB default, sink detach + cleanup), plus the progress read the
-    // dropped-row accounting needs
-    val sink = s"latereplay_${System.nanoTime()}"
-    val ckptBase =
-      if (new java.io.File("/dev/shm").isDirectory) {
-        val d = new java.io.File("/dev/shm/graft-ckpt"); d.mkdirs(); d.toPath
-      } else java.nio.file.Files.createTempDirectory("graft-ckpt")
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptBase, "latereplay")
-      .toString
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(ProviderKey)
-    if (!sys.env.get("SPARK_GRAFT_STATESTORE").contains("hdfs"))
-      spark.conf.set(ProviderKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val PartsKey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.getOption(PartsKey)
-    if (statePartitions > 0) spark.conf.set(PartsKey, statePartitions.toString)
-    try {
-      val q = agg.writeStream.outputMode("append")
-        .format("memory").queryName(sink)
-        .option("checkpointLocation", s"$ckpt/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val dropped = q.recentProgress.iterator
-        .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
-      try {
-        val sinkDf = spark.table(sink)
-        val sinkRows = sinkDf.count()
-        require(sinkRows <= maxRows,
-          s"LateReplay sink holds $sinkRows rows > $maxRows — " +
-            "window×key output must stay summary-sized")
-        val rows = sinkDf.collect().map(r =>
-          Row("window", r.getString(0), r.getString(1), r.getLong(2))) :+
-          Row("late_dropped_groups", null, null, dropped)
-        spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*),
-          StructType(Seq(
-            StructField("kind", StringType, nullable = false),
-            StructField("k", StringType, nullable = true),
-            StructField("window_start", StringType, nullable = true),
-            StructField("n_rows", LongType, nullable = false))))
-      } finally {
-        spark.catalog.dropTempView(sink)
-        try org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(ckpt))
-        catch { case _: Exception => () }
-      }
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None => spark.conf.unset(ProviderKey)
-      }
-      prevParts match {
-        case Some(v) => spark.conf.set(PartsKey, v)
-        case None => spark.conf.unset(PartsKey)
-      }
-    }
+    val drained = Drain.availableNow(agg, "latereplay", "append", maxRows,
+      statePartitions)
+    val dropped = drained.progress.iterator
+      .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+    val rows = drained.result.collect().map(r =>
+      Row("window", r.getString(0), r.getString(1), r.getLong(2))) :+
+      Row("late_dropped_groups", null, null, dropped)
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*),
+      StructType(Seq(
+        StructField("kind", StringType, nullable = false),
+        StructField("k", StringType, nullable = true),
+        StructField("window_start", StringType, nullable = true),
+        StructField("n_rows", LongType, nullable = false))))
   }
 }

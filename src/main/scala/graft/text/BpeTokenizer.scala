@@ -25,9 +25,7 @@ import org.apache.spark.sql.functions._
   * open-vocabulary corpus cap it with `maxWords`, which keeps the top
   * frequencies — the only ones BPE merges ever fire on). Scoring ships
   * the vocabulary to executors and runs one scan-local UDF per row; the
-  * text column never shuffles. A distinct-word memoized variant (join
-  * token counts back by word) is the alternative when rows are long and
-  * the word vocabulary is small — same result by construction.
+  * text column never shuffles.
   */
 object BpeTokenizer {
 
@@ -152,32 +150,6 @@ object BpeTokenizer {
       else text.split(" ", -1).flatMap(w => memo.tokens(w))
     }
     docs.select(col(idCol), explode(toksUdf(col(textCol))).as("token"))
-  }
-
-  /** Distinct-word JOIN variant of [[subwordCounts]] — the alternative
-    * shape the round-8 scaladoc named: explode docs to `(id, word)`,
-    * tokenize each DISTINCT word exactly once, join the per-word counts
-    * back and re-aggregate per doc. Same result by construction
-    * (`BpeTokenizerSpec` pins equality). Measured on this corpus
-    * (OPTIMIZATION_r09.md): SLOWER than the memoized scan-local UDF —
-    * the (id, word) explode + two aggregations + join cost more than
-    * re-tokenizing through the per-task memo, and the word stream enters
-    * an exchange where the UDF path shuffles nothing. Right shape only
-    * when rows are very long AND the distinct-word table is small
-    * relative to total word volume per task. */
-  def subwordCountsViaDistinct(docs: DataFrame, idCol: String,
-      textCol: String, vocabulary: Seq[String]): DataFrame = {
-    val memo = new TokenMemo(vocabulary.toSet)
-    val cntU = udf { w: String => memo.tokens(w).length.toLong }
-    val words = docs.where(col(textCol).isNotNull)
-      .select(col(idCol), explode(split(col(textCol), " ", -1)).as("_w"))
-    val perWord = words.select("_w").distinct()
-      .withColumn("_n", cntU(col("_w")))
-    val perDoc = words.join(perWord, Seq("_w"))
-      .groupBy(col(idCol)).agg(sum(col("_n")).as("subword_tokens"))
-    docs.select(col(idCol)).join(perDoc, Seq(idCol), "left_outer")
-      .select(col(idCol),
-        coalesce(col("subword_tokens"), lit(0L)).as("subword_tokens"))
   }
 
   /** Per-doc subword token counts: `(idCol, subword_tokens)` — one

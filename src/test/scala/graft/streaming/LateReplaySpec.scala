@@ -82,4 +82,24 @@ class LateReplaySpec extends AnyFunSuite {
     assert(layout() === first)
     assert(spark.read.parquet(s"$dir/b*").count() === 25L)
   }
+
+  test("writeBatches keeps one file per batch under a session maxRecordsPerFile") {
+    import spark.implicits._
+    val key = "spark.sql.files.maxRecordsPerFile"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try {
+      val dir = Files.createTempDirectory("late-replay-maxrec").toString
+      val rows = (0 until 25).map(i =>
+        (i % 5L, s"k$i", new java.sql.Timestamp(1767268800000L + i * 1000L)))
+        .toDF("batch", "k", "ts")
+      assert(LateReplay.writeBatches(rows, "batch", "k", "ts", dir) === 5)
+      for (i <- 0 until 5) {
+        val files = new java.io.File(dir, s"b$i").listFiles()
+          .filter(_.getName.endsWith(".parquet"))
+        assert(files.length === 1, s"b$i")
+        assert(spark.read.parquet(files.head.getPath).count() === 5L)
+      }
+    } finally spark.conf.set(key, prev)
+  }
 }

@@ -56,37 +56,27 @@ class BpeTokenizerSpec extends AnyFunSuite {
     val got = BpeTokenizer.subwordCounts(docs, "doc_id", "text", voc)
       .as[(Long, Long)].collect().toMap
     val vs = voc.toSet
-    def expected(t: String): Long =
+    def expected(t: String, v: Set[String] = vs): Long =
       if (t == null) 0L
       else t.split(" ", -1).iterator
-        .map(w => BpeTokenizer.tokenize(w, vs).length.toLong).sum
+        .map(w => BpeTokenizer.tokenize(w, v).length.toLong).sum
     assert(got(1L) === expected("low lower lowest") && got(1L) > 3L)
     assert(got(2L) === 0L && got(3L) === 0L)
     assert(got(4L) === expected("a  b"))
     assert(got(5L) === expected("newestwidest") && got(5L) >= 2L)
-  }
-
-  test("subwordCountsViaDistinct ≡ subwordCounts (r8 verdict #7 variant)") {
-    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    // corpus scale: every sf0.01 doc under a vocabulary trained on it
+    val corpus = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
       .select("doc_id", "text")
-    val train = docs.where(col("doc_id") % 4 < 3)
-    val freqs = BpeTokenizer.wordFreqs(train, "text")
-    val voc = BpeTokenizer.vocab(freqs,
-      BpeTokenizer.trainMerges(freqs, numMerges = 60))
-    val a = BpeTokenizer.subwordCounts(docs, "doc_id", "text", voc)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = BpeTokenizer.subwordCountsViaDistinct(docs, "doc_id", "text", voc)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a === b)
-    // null/empty rows route identically through both paths
-    import spark.implicits._
-    val edge = Seq((1L, null.asInstanceOf[String]), (2L, ""), (3L, "a b"))
-      .toDF("doc_id", "text")
-    val ae = BpeTokenizer.subwordCounts(edge, "doc_id", "text", voc)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val be = BpeTokenizer.subwordCountsViaDistinct(edge, "doc_id", "text", voc)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ae === be)
+    val cfreqs = BpeTokenizer.wordFreqs(corpus.where(col("doc_id") % 4 < 3),
+      "text")
+    val cvoc = BpeTokenizer.vocab(cfreqs,
+      BpeTokenizer.trainMerges(cfreqs, numMerges = 60))
+    val cvs = cvoc.toSet
+    val corpusGot = BpeTokenizer.subwordCounts(corpus, "doc_id", "text", cvoc)
+      .as[(Long, Long)].collect().toMap
+    val corpusExpected = corpus.as[(Long, String)].collect()
+      .map { case (id, t) => id -> expected(t, cvs) }.toMap
+    assert(corpusGot.size > 0 && corpusGot === corpusExpected)
   }
 
   test("committed q80 vocabularies equal live re-training at every scale") {
