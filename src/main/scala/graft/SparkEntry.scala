@@ -822,6 +822,8 @@ object SparkEntry {
     // verified) composed with transitive closure — keeper selection is
     // per-CLUSTER, not per-pair (a chain a~b, b~c is ONE group with one
     // keeper, which pair-local removal gets wrong). Components via
+    // driver-side union-find while the pair list fits the broadcast bound
+    // (16 B per edge ≤ autoBroadcastJoinThreshold, the case here), else
     // min-label propagation + path compression, each round's ids-only
     // labels localCheckpoint'ed (the cascade lineage discipline). The
     // oracle recomputes the exact pairs (the q14 recipe) and closes them

@@ -1,9 +1,10 @@
 package graft.dedup
 
 import graft.text.TextAnalysis
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash+LSH, SimHash, n-gram Jaccard verification, embedding-cosine.
@@ -100,6 +101,16 @@ object Dedup {
       .withColumn(scoreName, score(col("_f_a"), col("_f_b")))
       .where(col(scoreName) >= threshold)
       .select(col("id_a"), col("id_b"), round(col(scoreName), 6).as(scoreName))
+
+  /** The size rule for an id-pair set counted on a checkpoint: it may be
+    * broadcast or brought to the driver while 16 B × `pairs` (two longs a
+    * pair) ≤ the session's `spark.sql.autoBroadcastJoinThreshold` — the
+    * driver footprint the session already accepts for one broadcast. A
+    * threshold ≤ 0 (broadcasts off) never fits. */
+  private def pairsFitBroadcast(s: SparkSession, pairs: Long): Boolean = {
+    val limit = s.sessionState.conf.autoBroadcastJoinThreshold
+    limit > 0 && 16L * pairs <= limit
+  }
 
   /** Monitoring view of what a cap would drop: (bucketCols..., bucket_size)
     * for buckets above the cap. Log/inspect this alongside any capped run —
@@ -392,9 +403,8 @@ object Dedup {
     val pairs = counted.get.apply("n").asInstanceOf[Long]
     val candIds = cands.select(col("id_a").as(idCol))
       .unionByName(cands.select(col("id_b").as(idCol))).distinct()
-    val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     val prefilter =
-      if (limit > 0 && 16L * pairs <= limit) broadcast(candIds) else candIds
+      if (pairsFitBroadcast(df.sparkSession, pairs)) broadcast(candIds) else candIds
     val sh = ensureParallelism(df).join(prefilter, Seq(idCol), "left_semi")
       .select(col(idCol).as("_id"), shingleSet(col(textCol), shingleLen).as("_f"))
     verifyPairs(cands, sh, sh, jaccard, "jaccard", threshold)
@@ -680,39 +690,104 @@ object Dedup {
     * `component` is the smallest id in the node's component — the unique
     * fixpoint, so the output is deterministic regardless of execution
     * order. Ids NOT in any pair have no row (they are their own keepers).
+    * A NULL id in the pair list throws `IllegalArgumentException`.
     *
-    * Algorithm: min-label propagation with per-round path compression
-    * (label := label(label)) — the "hash-to-min" family from the public
-    * MapReduce connected-components literature; compression makes long
-    * chains collapse in O(log n) rounds instead of O(diameter). Each round
-    * is two keyed joins + one min-aggregation over ids-only frames, and
-    * each round's labels are materialized with an eager `localCheckpoint`
-    * — the same lineage-truncation discipline as [[cascade]] (a persisted
-    * iterative plan nests every prior round and blows up under AQE).
-    * Convergence is checked exactly (any label changed?); a graph that
-    * fails to converge within `maxIters` throws rather than returning a
-    * wrong coarsening. Near-dup graphs at corpus scale are shallow
-    * (members cluster around a seed doc), so rounds ≈ 3-5 in practice. */
+    * The pair list is checkpointed once; an `Observation` on that job
+    * counts its edges and NULL-endpoint edges (no extra job). The count
+    * picks the finish; both return the same rows and schema (names, types,
+    * nullability, order):
+    *
+    *  - '''Driver-local''' when both ids are `LongType` and 16 B × edges ≤
+    *    `spark.sql.autoBroadcastJoinThreshold` (the [[minhashNearDups]]
+    *    rule). One job packs each partition into a primitive `Array[Long]`,
+    *    so the driver holds 16 B per edge: the footprint the session
+    *    already accepts for one broadcast, which is why that threshold is
+    *    the bound. Sorted, deduped ids feed an array union-find that links
+    *    the larger root index under the smaller, so every root is its
+    *    component's min id; the result is a local frame, one row per id,
+    *    with no round bound. At near-dup scale this replaces a handful of
+    *    Spark jobs per propagation round.
+    *  - '''Distributed''' otherwise (too many edges, broadcasts off, or
+    *    non-`LongType` ids): min-label propagation with per-round path
+    *    compression (label := label(label)) — the "hash-to-min" family
+    *    from the public MapReduce connected-components literature.
+    *    Compression collapses a chain numbered along its length (the
+    *    copy-of-copy shape) in O(log n) rounds; an arbitrarily numbered
+    *    chain can need rounds on the order of its length. Each round is
+    *    two keyed joins + one min-aggregation over ids-only frames, its
+    *    labels materialized with an eager `localCheckpoint` — the
+    *    lineage-truncation discipline of [[cascade]] (a persisted
+    *    iterative plan nests every prior round and blows up under AQE).
+    *    Convergence is checked exactly (any label changed?); a graph that
+    *    fails to converge within `maxIters` throws rather than returning a
+    *    wrong coarsening. Near-dup graphs at corpus scale are shallow
+    *    (members cluster around a seed doc), so rounds ≈ 3-5 in practice. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIters: Int = 25): DataFrame = {
-    // materialize the raw pair list FIRST: the caller's `pairs` is
-    // typically a whole detection pipeline (LSH + exact verify), and the
-    // symmetrizing union below references it twice — un-materialized, the
-    // pipeline's post-shuffle compute would execute once per branch
+    // materialize the raw pair list FIRST, its edge and NULL-endpoint
+    // counts observed on the same job: the caller's `pairs` is typically a
+    // whole detection pipeline (LSH + exact verify), and the distributed
+    // finish's symmetrizing union references it twice — un-materialized,
+    // the pipeline's post-shuffle compute would execute once per branch
+    val seen = org.apache.spark.sql.Observation()
     val e0 = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+      .observe(seen, count(lit(1)).as("edges"),
+        count(when(col("src").isNull || col("dst").isNull, 1)).as("nulls"))
       .localCheckpoint()
+    val stats = seen.get
+    val edgeCount = stats("edges").asInstanceOf[Long]
     // a NULL endpoint cannot carry identity through the label joins — it
     // would silently break its edge's connectivity AND emit a junk
-    // (null, null) row; fail loudly instead (cheap: e0 is a leaf)
-    require(e0.where(col("src").isNull || col("dst").isNull).isEmpty,
+    // (null, null) row; fail loudly instead
+    require(stats("nulls").asInstanceOf[Long] == 0L,
       "connectedComponents: pair list contains NULL ids")
+    val longIds = e0.schema.forall(_.dataType == LongType)
+    if (longIds && pairsFitBroadcast(pairs.sparkSession, edgeCount)) localComponents(e0)
+    else propagateLabels(e0, edgeCount, maxIters)
+  }
+
+  /** [[connectedComponents]]' driver-local finish over the checkpointed
+    * `(src, dst)` LongType edge list. */
+  private def localComponents(e0: DataFrame): DataFrame = {
+    val flat = Array.concat(e0.queryExecution.toRdd.mapPartitions { rows =>
+      val b = new scala.collection.mutable.ArrayBuilder.ofLong
+      rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+      Iterator.single(b.result())
+    }.collect(): _*)
+    val ids = flat.clone()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (i <- ids.indices) if (n == 0 || ids(n - 1) != ids(i)) { ids(n) = ids(i); n += 1 }
+    val parent = Array.range(0, n)
+    def root(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    for (k <- flat.indices by 2) {
+      val ra = root(index(flat(k)))
+      val rb = root(index(flat(k + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    // the distributed finish's node/label columns both come from the
+    // symmetrized (src ∪ dst) column, nullable if either side is
+    val nullable = e0.schema.exists(_.nullable)
+    val schema = StructType(Seq("node", "component").map(StructField(_, LongType, nullable)))
+    e0.sparkSession.createDataFrame(
+      java.util.Arrays.asList(Array.tabulate(n)(i => Row(ids(i), ids(root(i)))): _*), schema)
+  }
+
+  /** [[connectedComponents]]' distributed finish: min-label propagation
+    * over the checkpointed `(src, dst)` edge list of `edgeCount` rows. */
+  private def propagateLabels(e0: DataFrame, edgeCount: Long, maxIters: Int): DataFrame = {
     val edges = e0
       .unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().localCheckpoint()
     var labels = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label")).localCheckpoint()
     var it = 0
-    var converged = labels.isEmpty
+    var converged = edgeCount == 0L
     while (!converged && it < maxIters) {
       // every node has >= 1 edge and every node is labeled, so the inner
       // join + min covers the full node set; least() skips NULLs, so no
@@ -773,9 +848,11 @@ object Dedup {
     * aliased) so the report would expose a future labeling change rather
     * than silently asserting the old invariant.
     *
-    * Scale shape: inherits [[connectedComponents]]' ids-only frames; the
-    * report adds ONE counting groupBy over (node, component) pairs —
-    * clusters × members enter the exchange, never payloads. */
+    * Scale shape: inherits [[connectedComponents]]' finish — a local
+    * frame when the edge list is within the broadcast bound, ids-only
+    * checkpointed frames above it; the report adds ONE counting groupBy
+    * over (node, component) pairs — clusters × members enter the exchange,
+    * never payloads. */
   def clusterKeepers(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
     connectedComponents(pairs, aCol, bCol)
       .groupBy(col("component").as("component_id"))

@@ -19,6 +19,27 @@ class DedupSpec extends AnyFunSuite {
     (5L, "The Quick Brown Fox jumps over the lazy dog and runs far away today"),
   ).toDF("doc_id", "text")
 
+  /** Run `body` with broadcasts off (threshold -1): the above-bound
+    * branch of every size rule. The session's previous value is restored. */
+  def aboveBroadcastBound[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Whether a connected-components result came from the driver-local
+    * finish (a local frame) rather than the label-propagation loop. */
+  def isLocalFinish(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r
+    }.nonEmpty
+
+  // a 6-chain, a triangle and a lone pair: three components keyed 1, 10, 20
+  lazy val ccPairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
+    (10L, 11L), (11L, 12L), (10L, 12L),
+    (20L, 21L)).toDF("id_a", "id_b")
+
   test("exact dedup keeps smallest id per normalized-fingerprint group") {
     val kept = Dedup.exactKeep(docs, "doc_id", "text")
     // 1==2 exactly; 5 differs only by case → same normalized fingerprint
@@ -68,9 +89,7 @@ class DedupSpec extends AnyFunSuite {
     val (default, defaultBroadcasts) = run()
     assert(default.nonEmpty)
     assert(defaultBroadcasts > 0, "small candidate set should broadcast its ids")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val (plain, plainBroadcasts) =
-      try run() finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    val (plain, plainBroadcasts) = aboveBroadcastBound(run())
     assert(plain === default)
     assert(plainBroadcasts === 0, "threshold -1 must not broadcast the candidate ids")
   }
@@ -350,9 +369,7 @@ class DedupSpec extends AnyFunSuite {
   test("connected components: chains collapse, clusters separate, fixpoint is min id") {
     // a 6-chain (multiple propagation+compression rounds), a triangle, a
     // lone pair — three components keyed by their min ids
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
-      (10L, 11L), (11L, 12L), (10L, 12L),
-      (20L, 21L)).toDF("id_a", "id_b")
+    val pairs = ccPairs
     val comp = Dedup.connectedComponents(pairs, "id_a", "id_b")
       .as[(Long, Long)].collect().toMap
     assert(comp === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
@@ -365,17 +382,116 @@ class DedupSpec extends AnyFunSuite {
     // empty pair list → empty result, no iteration
     assert(Dedup.connectedComponents(
       Seq.empty[(Long, Long)].toDF("id_a", "id_b"), "id_a", "id_b").isEmpty)
+    // ... on both branches
+    aboveBroadcastBound {
+      assert(Dedup.connectedComponents(
+        Seq.empty[(Long, Long)].toDF("id_a", "id_b"), "id_a", "id_b").isEmpty)
+    }
     // non-convergence within maxIters fails loudly, never returns a
-    // wrong coarsening (a 6-chain needs >1 round)
-    intercept[IllegalStateException] {
-      Dedup.connectedComponents(pairs, "id_a", "id_b", maxIters = 1).count()
+    // wrong coarsening (a 6-chain needs >1 round). Only the distributed
+    // branch iterates, so it runs above the broadcast bound.
+    aboveBroadcastBound {
+      intercept[IllegalStateException] {
+        Dedup.connectedComponents(pairs, "id_a", "id_b", maxIters = 1).count()
+      }
     }
-    // NULL endpoints are rejected loudly, not silently disconnected
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(
-        Seq((Some(1L), Some(2L)), (None, Some(3L)))
-          .toDF("id_a", "id_b"), "id_a", "id_b")
+    // NULL endpoints are rejected loudly, not silently disconnected — on
+    // both branches, with the same message
+    def rejectsNull(): Unit = {
+      val e = intercept[IllegalArgumentException] {
+        Dedup.connectedComponents(
+          Seq((Some(1L), Some(2L)), (None, Some(3L)))
+            .toDF("id_a", "id_b"), "id_a", "id_b")
+      }
+      assert(e.getMessage.contains("connectedComponents: pair list contains NULL ids"))
     }
+    rejectsNull()
+    aboveBroadcastBound(rejectsNull())
+  }
+
+  test("connected components: driver-local and distributed finishes agree on a seeded graph") {
+    val rng = new scala.util.Random(20261018L)
+    // a copy-of-copy chain: ids ascend along it, edges arrive in random
+    // order and direction (101 nodes, 100 edges, 7 propagation rounds)
+    val chainEdges = (1000L until 1100L).map(a =>
+      if (rng.nextBoolean()) (a, a + 1) else (a + 1, a))
+    val star = (5001L to 5200L).map(leaf => (5000L, leaf)) // 200 leaves
+    val twoNode = (0 until 300).map(i => (10000L + 2 * i, 10001L + 2 * i))
+    val random = Seq.fill(250)((20000L + rng.nextInt(600), 20000L + rng.nextInt(600)))
+    val base = chainEdges ++ star ++ twoNode ++ random
+    val reversed = rng.shuffle(base).take(80).map(_.swap)
+    val duplicated = rng.shuffle(base).take(80)
+    val selfLoops = Seq((7000L, 7000L), (1050L, 1050L), (5000L, 5000L))
+    val edges = rng.shuffle(base ++ reversed ++ duplicated ++ selfLoops)
+    assert(edges.size >= 1000)
+    val g = edges.toDF("id_a", "id_b")
+    val local = Dedup.connectedComponents(g, "id_a", "id_b")
+    val dist = aboveBroadcastBound(Dedup.connectedComponents(g, "id_a", "id_b"))
+    assert(isLocalFinish(local) && !isLocalFinish(dist))
+    assert(local.schema === dist.schema)
+    val rows = local.as[(Long, Long)].collect().sorted
+    assert(rows === dist.as[(Long, Long)].collect().sorted)
+    // every node once, labelled with its component's min id
+    val byComp = rows.groupBy(_._2)
+    assert(rows.map(_._1).distinct.length === rows.length)
+    assert(byComp.forall { case (c, members) => members.map(_._1).min == c })
+    assert(byComp(1000L).length === 101 && byComp(5000L).length === 201)
+    assert(byComp(7000L).map(_._1).toSeq === Seq(7000L))
+    assert((0 until 300).forall(i => byComp(10000L + 2 * i).length == 2))
+
+    // nullable id columns (no NULL values) keep their nullability on both
+    val nullableIds = ccPairs.as[(Long, Long)].collect().toSeq
+      .map { case (a, b) => (Option(a), Option(b)) }.toDF("id_a", "id_b")
+    assert(nullableIds.schema.forall(_.nullable))
+    val localN = Dedup.connectedComponents(nullableIds, "id_a", "id_b")
+    val distN = aboveBroadcastBound(Dedup.connectedComponents(nullableIds, "id_a", "id_b"))
+    assert(localN.schema === distN.schema && localN.schema.forall(_.nullable))
+    assert(localN.collect().toSet === distN.collect().toSet)
+
+    // the driver-local finish has no round bound: a randomly numbered
+    // 101-chain, which label propagation needs ~40-60 rounds for (over
+    // maxIters), closes in one pass
+    val perm = rng.shuffle((30000L to 30100L).toVector)
+    val shuffledChain = Dedup.connectedComponents(
+      perm.zip(perm.tail).toDF("id_a", "id_b"), "id_a", "id_b")
+    assert(isLocalFinish(shuffledChain))
+    assert(shuffledChain.as[(Long, Long)].collect().toMap ===
+      (30000L to 30100L).map(_ -> 30000L).toMap)
+  }
+
+  test("connected components: String ids take the distributed branch, min-string labels") {
+    val pairs = Seq(("b", "a"), ("c", "b"), ("dd", "c"), ("y", "x"), ("q", "q"))
+      .toDF("id_a", "id_b")
+    val comp = Dedup.connectedComponents(pairs, "id_a", "id_b")
+    assert(!isLocalFinish(comp))
+    assert(comp.as[(String, String)].collect().toMap === Map(
+      "a" -> "a", "b" -> "a", "c" -> "a", "dd" -> "a",
+      "x" -> "x", "y" -> "x", "q" -> "q"))
+  }
+
+  test("connected components job count: local below the broadcast bound, fewer above it") {
+    // clusterKeepers(...).collect() on the 9-edge fixture, every job of it
+    // (the eager ones inside connectedComponents included). Below the
+    // bound: the edge checkpoint, the packed-edge collect and the report's
+    // two. Above it: 31, one fewer than the 32 measured before the NULL
+    // and empty-graph checks read the checkpoint's Observation.
+    val sc = spark.sparkContext
+    def jobs(group: String)(run: => Unit): Int = {
+      sc.setJobGroup(group, "connected components job pin")
+      try run finally sc.clearJobGroup()
+      Thread.sleep(500) // status store is fed asynchronously
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val local = jobs("cc-jobs-local") {
+      Dedup.clusterKeepers(ccPairs, "id_a", "id_b").collect()
+    }
+    val distributed = aboveBroadcastBound {
+      jobs("cc-jobs-distributed") {
+        Dedup.clusterKeepers(ccPairs, "id_a", "id_b").collect()
+      }
+    }
+    assert(local === 4)
+    assert(distributed === 31)
   }
 
   test("default skew cap is a no-op on the documents corpus (sf0.1)") {
@@ -403,9 +519,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("clusterKeepers closes detect -> cluster -> remove: one keeper per cluster") {
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
-      (10L, 11L), (11L, 12L), (10L, 12L),
-      (20L, 21L)).toDF("id_a", "id_b")
+    val pairs = ccPairs
     val rep = Dedup.clusterKeepers(pairs, "id_a", "id_b")
       .collect().map(r => r.getAs[Long]("component_id") ->
         ((r.getAs[Long]("component_size"), r.getAs[Long]("keeper_id"),
